@@ -62,15 +62,13 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5-31-bit base + affine perms, signature-slice band keys): the
     DuckDB oracle re-derives the IDENTICAL signatures, band keys, and
     candidate set from SQL, so banding + pair join + exact-Jaccard
-    verify are all value-hash-checked end-to-end (the xxhash64 variant
-    remains the pure-speed path, unit-pinned). band_cap=None because
+    verify are all value-hash-checked end-to-end. band_cap=None because
     the oracle derives ALL band-collision candidates — the production
     cap would make Spark drop pairs the oracle keeps on a degenerate
     bucket (the cap's own planted test covers that guard)."""
     return D.minhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.4,
-        portable=True,
         band_cap=None,
         arrow=True,
     )
@@ -86,8 +84,7 @@ def q_duplicate_token_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg over a map-side token count."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, portable=True, band_cap=None,
-        arrow=True,
+        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
     )
     dup_ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -123,8 +120,7 @@ def q_cross_source_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow id-keyed joins, then a |sources|^2-bounded aggregate."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, portable=True, band_cap=None,
-        arrow=True,
+        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
     )
     src = docs.select("doc_id", "source")
     j = pairs.join(
@@ -173,7 +169,6 @@ def q_quality_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.quality_dedup_survivors(
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.4,
-        portable=True,
         band_cap=None,
         arrow=True,
     )
@@ -293,7 +288,6 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.near_dup_clusters(
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.4,
-        portable=True,
         band_cap=None,
         arrow=True,
     )
@@ -311,8 +305,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "split"
     )
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, portable=True, band_cap=None,
-        arrow=True,
+        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
     )
     sa = split.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     sb = split.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
@@ -334,10 +327,10 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 10 == 7
     cs = D.minhash_signature_table(
-        docs.filter(~is_new), portable=True, arrow=True
+        docs.filter(~is_new), arrow=True
     ).persist()
     ns = D.minhash_signature_table(
-        docs.filter(is_new), portable=True, arrow=True
+        docs.filter(is_new), arrow=True
     ).persist()
     cs.count(), ns.count()  # eager fill: see minhash_near_duplicates
     # materialize the (tiny) pair result, then RELEASE the two
@@ -345,7 +338,7 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small cached result, so nothing leaks into the rest of a
     # long-lived session
     out = D.near_duplicates_incremental(
-        cs, ns, jaccard_threshold=0.4, band_cap=None, portable=True
+        cs, ns, jaccard_threshold=0.4, band_cap=None
     ).persist()
     out.count()
     cs.unpersist()
@@ -377,7 +370,7 @@ def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     id sample. The bounded id sample is flattened to CSV so every
     contract column is scalar."""
     return D.simhash_buckets(
-        _t(spark, sf_dir, "documents"), bits=24, prefix_bits=12, portable=True
+        _t(spark, sf_dir, "documents"), bits=24, prefix_bits=12
     ).select(
         "bucket", "n_docs", F.array_join("doc_ids", ",").alias("doc_ids_csv")
     ).orderBy("bucket")
@@ -392,7 +385,6 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         bits=24,
         max_hamming=2,
-        portable=True,
     )
 
 
@@ -453,8 +445,7 @@ def q_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, portable=True, band_cap=None,
-        arrow=True,
+        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
     )
     dup_drop = (
         pairs.join(s1.withColumnRenamed("doc_id", "doc_a"), "doc_a", "semi")
@@ -645,7 +636,7 @@ def q_minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     observability readout that predicts band_cap truncation and join
     cost BEFORE the pair join runs."""
     return D.minhash_band_stats(
-        _t(spark, sf_dir, "documents"), portable=True, arrow=True
+        _t(spark, sf_dir, "documents"), arrow=True
     )
 
 

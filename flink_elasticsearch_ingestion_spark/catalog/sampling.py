@@ -246,7 +246,6 @@ def q_cluster_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         k=150,
         jaccard_threshold=0.4,
-        portable=True,
         band_cap=None,
     )
 
@@ -280,7 +279,6 @@ def q_leakage_safe_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         k=5,
         jaccard_threshold=0.4,
-        portable=True,
         band_cap=None,
     )
 

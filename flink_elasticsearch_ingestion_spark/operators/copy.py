@@ -59,42 +59,26 @@ def incremental_filter(df: DataFrame, checkpoint_ts: dt.datetime | str | None, t
     return df.filter(F.col(ts_col) > F.lit(checkpoint_ts))
 
 
-def last_wins(
-    df: DataFrame, key: str = "doc_id", order_col: str = "ts", strategy: str = "agg"
-) -> DataFrame:
+def last_wins(df: DataFrame, key: str = "doc_id", order_col: str = "ts") -> DataFrame:
     """Last-write-wins per document id (upsert semantics, core.clj:62-63).
 
     Ties broken deterministically by the full column tuple so re-runs
-    are stable. Two physical strategies with identical results:
-
-    - ``"agg"`` (default): ``max(struct(order_col, ...))`` aggregation.
-      Struct comparison is field-order lexicographic, so the max struct
-      IS the last-wins row. This is the 100 TB shape: partial (map-side)
-      aggregation collapses duplicates BEFORE the shuffle — a hot doc_id
-      rewritten 10^6 times ships one row per map task, not 10^6. (Struct
-      buffers plan as SortAggregate, still partial+final; the window
-      form has no combiner at all.)
-    - ``"window"``: ``row_number() over (partition by key order by ...
-      desc)``. Full sort of every group after a full shuffle; kept for
-      plan comparison and for callers that need rank > 1 too.
+    are stable. One ``max(struct(order_col, ...))`` aggregation: struct
+    comparison is field-order lexicographic, so the max struct IS the
+    last-wins row. This is the 100 TB shape: partial (map-side)
+    aggregation collapses duplicates BEFORE the shuffle — a hot doc_id
+    rewritten 10^6 times ships one row per map task, not 10^6. (Struct
+    buffers plan as SortAggregate, still partial+final; a
+    ``row_number`` window form would have no combiner at all.)
     """
     others = [c for c in df.columns if c not in (key, order_col)]
-    if strategy == "agg":
-        packed = F.max(F.struct(F.col(order_col), *[F.col(c) for c in others])).alias("__top")
-        out = df.groupBy(key).agg(packed)
-        return out.select(
-            key,
-            F.col(f"__top.{order_col}").alias(order_col),
-            *[F.col(f"__top.{c}").alias(c) for c in others],
-        ).select(*df.columns)  # original column order
-    w = Window.partitionBy(key).orderBy(
-        F.col(order_col).desc(), *[F.col(c).desc() for c in others]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    packed = F.max(F.struct(F.col(order_col), *[F.col(c) for c in others])).alias("__top")
+    out = df.groupBy(key).agg(packed)
+    return out.select(
+        key,
+        F.col(f"__top.{order_col}").alias(order_col),
+        *[F.col(f"__top.{c}").alias(c) for c in others],
+    ).select(*df.columns)  # original column order
 
 
 def max_ts_checkpoint(df: DataFrame, ts_col: str = TS) -> DataFrame:

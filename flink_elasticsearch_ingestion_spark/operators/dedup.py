@@ -24,21 +24,24 @@ from flink_elasticsearch_ingestion_spark.operators.util import (
 
 
 # ---------------------------------------------------------------------------
-# Engine-portable hash family
+# The MinHash/SimHash hash family
 #
-# xxhash64 is the fastest JVM-side hash Spark ships, but no other engine
-# computes it from SQL, so xxhash64-based operators can only ever get
-# rows-only differential checks.  The portable family below is md5-based:
-# md5 is bit-identical across Spark, DuckDB, Postgres, Trino..., so a
-# MinHash/SimHash/split built on it can be value-hash-verified end-to-end
-# by an independent SQL engine.  DuckDB twin of portable_hash31:
+# Every shingle, signature and band key below is built on ONE md5-based
+# family: md5 is bit-identical across Spark, DuckDB, Postgres, Trino...,
+# so a MinHash/SimHash/split built on it can be value-hash-verified
+# end-to-end by an independent SQL engine.  DuckDB twin of portable_hash31:
 #     ('0x' || substr(md5(s), 1, 8))::BIGINT % 2147483647
-# Cost: one md5 per shingle string instead of one xxhash64 — measurably
-# slower per byte, so the xxhash64 variants remain the pure-speed path
-# when cross-engine verification is not required (portable=False).
+# Feature hashes are 31-bit, so SimHash signatures carry at most 31 bits.
+# Cost: one md5 per token, dearer than the JVM's xxhash64; the Arrow twin
+# (``minhash_signature_table(arrow=True)``) recovers part of that.  A
+# faster engine-specific family would give results no other engine can
+# check, so there is no second family.
 # ---------------------------------------------------------------------------
 
 MERSENNE31 = 2147483647  # 2^31 - 1, prime; modulus of the affine perms
+
+#: signal bits of a SimHash over md5-31 feature hashes
+SIMHASH_MAX_BITS = 31
 
 #: fixed affine coefficients (a_j, b_j) for the portable MinHash perms —
 #: deterministic so the DuckDB oracle can inline the same literals
@@ -64,37 +67,6 @@ def portable_hash31(col: F.Column) -> F.Column:
 #: intermediate of ((acc*POLY_C) % p + h) % p stays below 2^62 (exact in
 #: BIGINT on any engine)
 POLY_C = 1000003
-
-
-def portable_hashed_word_shingles(col: str = "text", k: int = 3) -> F.Column:
-    """Distinct portable-hashed k-word shingles (``array<bigint>``).
-
-    Same structure as ``hashed_word_shingles`` — each token md5-hashed
-    exactly ONCE, shingle hashes derived from the fixed-width token
-    hashes — but with the engine-portable pieces: md5-31 per token and
-    a left-fold polynomial combine over each k-token slice instead of
-    xxhash64-of-slice. No shingle strings are materialized. DuckDB
-    twin of the combine:
-    ``list_reduce(list_prepend(0, ht[i:i+k-1]),
-    (a, x) -> ((a*1000003) % p + x) % p)``."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(col))), "\\s+", " "), " ")
-    hashed_toks = F.transform(toks, lambda t: portable_hash31(t))
-    p = F.lit(MERSENNE31)
-
-    def build(ht: F.Column) -> F.Column:
-        n = F.greatest(F.size(ht) - F.lit(k - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.aggregate(
-                    F.slice(ht, i, k),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, h: ((acc * F.lit(POLY_C)) % p + h) % p,
-                ),
-            )
-        )
-
-    return _bind_once(hashed_toks, build)
 
 
 def portable_minhash_signature(hashes: F.Column, num_hashes: int = 16) -> F.Column:
@@ -173,83 +145,28 @@ def word_shingles(col: str = "text", k: int = 3) -> F.Column:
     return _bind_once(toks, build)
 
 
-def minhash_signature(shingles: F.Column, num_hashes: int = 32) -> F.Column:
-    """MinHash signature as ``array<bigint>`` of length ``num_hashes``.
-
-    Cost model: the expensive part of MinHash is hashing variable-length
-    strings, so each shingle is xxhash64'd exactly ONCE (see
-    ``hashed_shingles`` — pass its output here); the ``num_hashes``
-    independent hash functions are then derived by re-hashing the fixed-
-    width int64 with a per-function seed: ``xxhash64(h, j)`` costs a few
-    integer rounds vs. a full scan of the shingle string. This turns
-    O(num_hashes) string passes into 1 string pass + O(num_hashes)
-    integer passes — all whole-stage-codegen'd, no shuffle, and
-    overflow-free under ANSI mode (no raw 64-bit multiplies).
-
-    ``shingles`` should be already-hashed ``array<bigint>`` from
-    ``hashed_shingles`` (plain ``array<string>`` also works — xxhash64
-    then scans each string num_hashes times; avoid in the hot path).
-    """
-    # One nested higher-order expression instead of num_hashes unrolled
-    # array_min(transform(...)) trees: the expression tree stays O(1) in
-    # num_hashes, so Janino codegen compiles in milliseconds instead of
-    # seconds (the unrolled form cost ~7 s of first-run compile at 16
-    # hashes because the candidate join duplicates it on both sides).
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda j: F.array_min(F.transform(shingles, lambda h: F.xxhash64(h, j))),
-    )
-
-
-def hashed_word_shingles(col: str = "text", k: int = 3) -> F.Column:
-    """Distinct xxhash64'd k-word shingles (``array<bigint>``) without
-    materializing shingle strings: each token is hashed once, then each
-    shingle hash is xxhash64 over the k-long slice of the hashed-token
-    array. One regex pass + one string-hash pass per doc; everything
-    after is fixed-width integer work. Equivalent to
-    ``hashed_shingles(word_shingles(col, k))`` up to the hash family."""
+def _hashed_tokens(col: str) -> F.Column:
+    """Per-token md5-31 hash array (``array<bigint>``): ONE regex pass +
+    ONE string-hash pass over the text."""
     toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(col))), "\\s+", " "), " ")
-    hashed_toks = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def build(ht: F.Column) -> F.Column:
-        n = F.greatest(F.size(ht) - F.lit(k - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n),
-                lambda i: F.xxhash64(F.slice(ht, i, k)),
-            )
-        )
-
-    return _bind_once(hashed_toks, build)
+    return F.transform(toks, lambda t: portable_hash31(t))
 
 
-def _hashed_tokens(col: str, portable: bool) -> F.Column:
-    """Per-token hash array (``array<bigint>``): ONE regex pass + ONE
-    string-hash pass over the text."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(col))), "\\s+", " "), " ")
-    return F.transform(
-        toks, (lambda t: portable_hash31(t)) if portable else (lambda t: F.xxhash64(t))
-    )
-
-
-def _shingles_from_tokens(ht: F.Column, k: int, portable: bool) -> F.Column:
+def _shingles_from_tokens(ht: F.Column, k: int) -> F.Column:
     """Distinct k-shingle hashes from an ALREADY-MATERIALIZED
-    token-hash column (fixed-width integer work only)."""
+    token-hash column (fixed-width integer work only): a left-fold
+    polynomial combine over each k-token slice. DuckDB twin:
+    ``list_reduce(list_prepend(0, ht[i:i+k-1]),
+    (a, x) -> ((a*1000003) % p + x) % p)``."""
     n = F.greatest(F.size(ht) - F.lit(k - 1), F.lit(1))
-    if portable:
-        p = F.lit(MERSENNE31)
+    p = F.lit(MERSENNE31)
 
-        def comb(i: F.Column) -> F.Column:
-            return F.aggregate(
-                F.slice(ht, i, k),
-                F.lit(0).cast("bigint"),
-                lambda acc, h: ((acc * F.lit(POLY_C)) % p + h) % p,
-            )
-
-    else:
-
-        def comb(i: F.Column) -> F.Column:
-            return F.xxhash64(F.slice(ht, i, k))
+    def comb(i: F.Column) -> F.Column:
+        return F.aggregate(
+            F.slice(ht, i, k),
+            F.lit(0).cast("bigint"),
+            lambda acc, h: ((acc * F.lit(POLY_C)) % p + h) % p,
+        )
 
     return F.array_distinct(F.transform(F.sequence(F.lit(1), n), comb))
 
@@ -260,7 +177,6 @@ def shingle_table(
     word_k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
 ) -> DataFrame:
     """(doc_id, shingles): the word-shingle build as TWO chained
     projections — token hashes materialized in their own projection,
@@ -276,20 +192,12 @@ def shingle_table(
     doc = ensure_parallelism(documents)
     ht_df = doc.select(
         F.col(id_col).alias("doc_id"),
-        _hashed_tokens(text_col, portable).alias("__ht"),
+        _hashed_tokens(text_col).alias("__ht"),
     )
     return ht_df.select(
         "doc_id",
-        _shingles_from_tokens(F.col("__ht"), word_k, portable).alias("shingles"),
+        _shingles_from_tokens(F.col("__ht"), word_k).alias("shingles"),
     )
-
-
-def hashed_shingles(shingles: F.Column) -> F.Column:
-    """Distinct xxhash64 of each shingle (``array<bigint>``). Jaccard on
-    hashed shingles equals Jaccard on the strings up to a ~2^-64 collision
-    probability, and the hashed set is far cheaper to cache, shuffle, and
-    intersect than variable-length strings."""
-    return F.array_distinct(F.transform(shingles, lambda s: F.xxhash64(s)))
 
 
 def simhash64(hashed_col: str, bits: int = 64) -> F.Column:
@@ -469,7 +377,6 @@ def minhash_signature_table(
     num_hashes: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
     arrow: bool = False,
 ) -> DataFrame:
     """(doc_id, shingles, sig): the materializable signature table —
@@ -479,22 +386,13 @@ def minhash_signature_table(
     (``write_signature_table`` / ``near_duplicates_from_signatures``)
     instead of re-shingling the corpus per run.
 
-    ``portable=True`` swaps xxhash64 for the md5-based engine-portable
-    family (module comment above) so an independent SQL engine can
-    re-derive the identical signatures.
+    Hashes are the md5-31 family (module comment above), so an
+    independent SQL engine can re-derive the identical signatures.
 
-    ``arrow=True`` (portable only) computes the identical table with
-    the vectorized Arrow twin (:func:`_arrow_signature_table`) — same
-    values, same oracle hashes, measured materially faster on the
-    md5 + 16-perm map stage (the xxhash64 path is already JVM-cheap
-    and has no Python md5 equivalent, so arrow is portable-only)."""
+    ``arrow=True`` computes the identical table with the vectorized
+    Arrow twin (:func:`_arrow_signature_table`) — same values, same
+    oracle hashes, measured faster on the md5 + 16-perm map stage."""
     if arrow:
-        if not portable:
-            raise ValueError(
-                "arrow=True requires portable=True: the arrow twin "
-                "replays the md5-31/affine family; xxhash64 has no "
-                "Python-side equivalent"
-            )
         return _arrow_signature_table(
             documents,
             word_k=word_k,
@@ -512,24 +410,20 @@ def minhash_signature_table(
             word_k=word_k,
             id_col=id_col,
             text_col=text_col,
-            portable=portable,
         )
     else:
-        char_expr = (
-            F.array_distinct(
-                F.transform(
-                    char_shingles(text_col, shingle_k), lambda s: portable_hash31(s)
-                )
+        char_expr = F.array_distinct(
+            F.transform(
+                char_shingles(text_col, shingle_k), lambda s: portable_hash31(s)
             )
-            if portable
-            else hashed_shingles(char_shingles(text_col, shingle_k))
         )
         shingled = ensure_parallelism(documents).select(
             F.col(id_col).alias("doc_id"), char_expr.alias("shingles")
         )
-    sig_fn = portable_minhash_signature if portable else minhash_signature
     return shingled.select(
-        "doc_id", "shingles", sig_fn(F.col("shingles"), num_hashes).alias("sig")
+        "doc_id",
+        "shingles",
+        portable_minhash_signature(F.col("shingles"), num_hashes).alias("sig"),
     )
 
 
@@ -539,28 +433,22 @@ def write_signature_table(documents: DataFrame, path: str, **kwargs) -> None:
     minhash_signature_table(documents, **kwargs).write.mode("overwrite").parquet(path)
 
 
-def _banded(
-    signatures: DataFrame, *, num_hashes: int, bands: int, portable: bool
-) -> DataFrame:
+def _banded(signatures: DataFrame, *, num_hashes: int, bands: int) -> DataFrame:
     """Explode a (doc_id, sig) table into (doc_id, band_idx, band_hash)
     rows — THE band-key definition, shared by the batch self-join and
     the incremental batch-vs-corpus join so corpus and batch signatures
-    can never drift onto incompatible keys. Portable mode keys by the
-    literal signature-slice CSV (engine-derivable); default keys by
-    xxhash64-of-slice (pure speed)."""
+    can never drift onto incompatible keys. A band key is the literal
+    signature slice rendered as a CSV string: slightly wider shuffle
+    keys than a hash of the slice, but an independent SQL engine
+    derives the identical key (no engine-specific hash in the join)."""
     rows_per_band = num_hashes // bands
-    if portable:
-        band_key = lambda b: F.concat_ws(  # noqa: E731
-            ",",
-            F.transform(
-                F.slice(F.col("sig"), b * rows_per_band + F.lit(1), rows_per_band),
-                lambda x: x.cast("string"),
-            ),
-        )
-    else:
-        band_key = lambda b: F.xxhash64(  # noqa: E731
-            F.slice(F.col("sig"), b * rows_per_band + F.lit(1), rows_per_band)
-        )
+    band_key = lambda b: F.concat_ws(  # noqa: E731
+        ",",
+        F.transform(
+            F.slice(F.col("sig"), b * rows_per_band + F.lit(1), rows_per_band),
+            lambda x: x.cast("string"),
+        ),
+    )
     return signatures.select(
         "doc_id",
         F.posexplode(
@@ -576,7 +464,6 @@ def near_duplicates_from_signatures(
     bands: int = 8,
     jaccard_threshold: float = 0.6,
     band_cap: int | None = 1000,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs from an existing (doc_id, shingles, sig) table
     (see ``minhash_signature_table``): band explode -> ids-only band
@@ -594,13 +481,8 @@ def near_duplicates_from_signatures(
     collapses identical texts to one representative before LSH ever
     sees them); genuinely-near (not identical) clusters bigger than
     ``band_cap`` still pair up through their other ``bands-1`` bands.
-    ``band_cap=None`` disables the guard.
-
-    ``portable=True`` keys bands by the literal signature slice
-    rendered as a CSV string instead of xxhash64-of-slice — slightly
-    wider shuffle keys, but an independent SQL engine can derive the
-    identical band key (no engine-specific hash in the join)."""
-    banded = _banded(signatures, num_hashes=num_hashes, bands=bands, portable=portable)
+    ``band_cap=None`` disables the guard."""
+    banded = _banded(signatures, num_hashes=num_hashes, bands=bands)
     if band_cap is not None:
         # same shuffle keys as the band join below, so AQE/exchange
         # reuse keeps this from adding an extra wide stage in practice
@@ -647,7 +529,6 @@ def minhash_near_duplicates(
     id_col: str = "doc_id",
     text_col: str = "text",
     band_cap: int | None = 1000,
-    portable: bool = False,
     arrow: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding + exact verify.
@@ -681,7 +562,6 @@ def minhash_near_duplicates(
         num_hashes=num_hashes,
         id_col=id_col,
         text_col=text_col,
-        portable=portable,
         arrow=arrow,
     ).persist()
     # Fill the cache EAGERLY: persist() alone is lazy, and the first
@@ -697,7 +577,6 @@ def minhash_near_duplicates(
         bands=bands,
         jaccard_threshold=jaccard_threshold,
         band_cap=band_cap,
-        portable=portable,
     )
 
 
@@ -709,7 +588,6 @@ def near_duplicates_incremental(
     bands: int = 8,
     jaccard_threshold: float = 0.6,
     band_cap: int | None = 1000,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-duplicates of a NEW batch against an existing corpus — the
     daily-increment shape of the dedup pipeline.
@@ -724,8 +602,8 @@ def near_duplicates_incremental(
     small the banded batch side broadcasts and the corpus band scan is
     the only fact-sized read.
 
-    Both inputs are (doc_id, shingles, sig) tables built with the SAME
-    (num_hashes, bands, hash family) as ``minhash_signature_table``.
+    Both inputs are (doc_id, shingles, sig) tables built by
+    ``minhash_signature_table`` with the SAME (num_hashes, bands).
     ``band_cap`` bounds each corpus band bucket exactly like the batch
     pipeline (degenerate-corpus guard).
 
@@ -735,10 +613,7 @@ def near_duplicates_incremental(
     running the full self-join over corpus+batch and keeping pairs
     whose larger id is in the batch — which is exactly how the DuckDB
     oracle verifies it."""
-    banded = lambda sigs: _banded(  # noqa: E731
-        sigs, num_hashes=num_hashes, bands=bands, portable=portable
-    )
-    corpus_bands = banded(corpus_sigs)
+    corpus_bands = _banded(corpus_sigs, num_hashes=num_hashes, bands=bands)
     if band_cap is not None:
         w = Window.partitionBy("band_idx", "band_hash").orderBy("doc_id")
         corpus_bands = (
@@ -746,7 +621,7 @@ def near_duplicates_incremental(
             .filter(F.col("_rn") <= band_cap)
             .drop("_rn")
         )
-    new_bands = banded(new_sigs)
+    new_bands = _banded(new_sigs, num_hashes=num_hashes, bands=bands)
     # new-vs-corpus: plain equi-join, no id ordering (disjoint id sets)
     vs_corpus = (
         new_bands.alias("n")
@@ -1128,7 +1003,6 @@ def near_dup_clusters(
     jaccard_threshold: float = 0.6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
     band_cap: int | None = 1000,
     arrow: bool = False,
 ) -> DataFrame:
@@ -1143,7 +1017,6 @@ def near_dup_clusters(
         jaccard_threshold=jaccard_threshold,
         id_col=id_col,
         text_col=text_col,
-        portable=portable,
         band_cap=band_cap,
         arrow=arrow,
     )
@@ -1241,8 +1114,7 @@ def simhash_signature(
     word_k: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
-    portable: bool = False,
+    bits: int = SIMHASH_MAX_BITS,
 ) -> DataFrame:
     """(doc_id, simhash) over word ``word_k``-gram features.
 
@@ -1254,9 +1126,15 @@ def simhash_signature(
     was measured SLOWER than the expression form (Arrow array transfer
     + per-row python dominates), so the expression path is the fast
     path, not just the pure one. Map-only; spread to full parallelism
-    when the scan has too few splits."""
-    # portable: md5-31-bit feature hashes (engine-portable, see module
-    # comment) — use bits <= 31 so every signature bit carries signal.
+    when the scan has too few splits.
+
+    Feature hashes are md5-31 (module comment), so bit 31 and up would
+    never get a positive vote: ``bits > 31`` raises ``ValueError``."""
+    if bits > SIMHASH_MAX_BITS:
+        raise ValueError(
+            f"bits={bits}: SimHash over 31-bit feature hashes carries at "
+            f"most {SIMHASH_MAX_BITS} signal bits"
+        )
     # Two-step shingle build (see shingle_table): token hashes run once
     # per row instead of once per gram.
     shingled = shingle_table(
@@ -1264,7 +1142,6 @@ def simhash_signature(
         word_k=word_k,
         id_col=id_col,
         text_col=text_col,
-        portable=portable,
     )
     return shingled.withColumnRenamed("shingles", "hs").select(
         "doc_id", simhash64("hs", bits).alias("simhash")
@@ -1277,8 +1154,7 @@ def simhash_buckets(
     word_k: int = 2,
     prefix_bits: int = 16,
     max_ids: int = 100,
-    bits: int = 64,
-    portable: bool = False,
+    bits: int = SIMHASH_MAX_BITS,
 ) -> DataFrame:
     """SimHash each doc and bucket by the top ``prefix_bits`` bits —
     near-dup candidates share a bucket. Map-side except the final
@@ -1295,7 +1171,7 @@ def simhash_buckets(
     consume the bucket key, not the sample list."""
     from pyspark.sql import Window
 
-    sig = simhash_signature(documents, word_k=word_k, bits=bits, portable=portable)
+    sig = simhash_signature(documents, word_k=word_k, bits=bits)
     w = Window.partitionBy("bucket").orderBy("doc_id")
     # Derive bucket and DROP the signature column in one projection:
     # keeping both would make CollapseProject inline the expensive
@@ -1327,7 +1203,6 @@ def simhash_hamming_pairs(
     max_hamming: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
 ) -> DataFrame:
     """SimHash near-duplicate PAIRS, end to end — the verify stage
     ``simhash_buckets`` leaves to its consumers (that operator emits
@@ -1351,15 +1226,13 @@ def simhash_hamming_pairs(
       4. distinct candidate pairs -> re-attach signatures (narrow)
       5. verify: ``bit_count(sig_a ^ sig_b) <= max_hamming``
 
-    ``portable=True`` (md5-31 feature hashes, bits <= 31) keeps every
-    signature bit DuckDB-replayable so the oracle re-derives the exact
-    pair set; the xxhash64 family is the production default elsewhere.
+    The md5-31 feature hashes (``bits <= 31``) keep every signature bit
+    DuckDB-replayable, so the oracle re-derives the exact pair set.
     Returns (doc_a, doc_b, hamming) with doc_a < doc_b."""
     n_bands = max_hamming + 1
     width = bits // n_bands
     sig = simhash_signature(
-        documents, word_k=word_k, id_col=id_col, text_col=text_col,
-        bits=bits, portable=portable,
+        documents, word_k=word_k, id_col=id_col, text_col=text_col, bits=bits
     ).persist()
     sig.count()  # eager: the band join has 2 consumers + 2 re-attaches
 
@@ -1893,7 +1766,6 @@ def near_dup_threshold_sweep(
         jaccard_threshold=lo,
         id_col=id_col,
         text_col=text_col,
-        portable=True,
         band_cap=None,
         arrow=True,  # bit-identical vectorized signature twin
     ).select("doc_a", "doc_b", "jaccard")
@@ -2061,7 +1933,6 @@ def contrastive_triples(
         jaccard_threshold=jaccard_threshold,
         id_col=id_col,
         text_col=text_col,
-        portable=True,
         band_cap=None,
         arrow=True,  # bit-identical vectorized signature twin
     ).select(
@@ -2115,7 +1986,6 @@ def quality_dedup_survivors(
     jaccard_threshold: float = 0.6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
     band_cap: int | None = 1000,
     arrow: bool = False,
 ) -> DataFrame:
@@ -2139,7 +2009,6 @@ def quality_dedup_survivors(
         jaccard_threshold=jaccard_threshold,
         id_col=id_col,
         text_col=text_col,
-        portable=portable,
         band_cap=band_cap,
         arrow=arrow,
     )
@@ -2343,7 +2212,7 @@ def containment_pairs(
     Returns (contained_id, container_id, containment), containment
     rounded to 6 dp.
     """
-    sigs = minhash_signature_table(documents, portable=True, arrow=True,
+    sigs = minhash_signature_table(documents, arrow=True,
                                    id_col=id_col, text_col=text_col).select(
         F.col(id_col).alias("doc"), F.col("shingles").alias("sh")
     ).persist()
@@ -2555,7 +2424,6 @@ def planted_dup_recall(
         combined,
         jaccard_threshold=jaccard_threshold,
         band_cap=None,
-        portable=True,
         arrow=True,
     )
     planted = base.select(
@@ -2614,16 +2482,10 @@ def minhash_estimate_error(
         num_hashes=num_hashes,
         id_col=id_col,
         text_col=text_col,
-        portable=True,
         arrow=True,
     ).persist()
     sigs.count()  # eager fill (see minhash_near_duplicates)
-    banded = _banded(
-        sigs.select("doc_id", "sig"),
-        num_hashes=num_hashes,
-        bands=bands,
-        portable=True,
-    )
+    banded = _banded(sigs.select("doc_id", "sig"), num_hashes=num_hashes, bands=bands)
     if band_cap is not None:
         w = Window.partitionBy("band_idx", "band_hash").orderBy("doc_id")
         banded = (
@@ -2823,7 +2685,6 @@ def minhash_band_stats(
     bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
     arrow: bool = False,
 ) -> DataFrame:
     """LSH band-bucket occupancy histogram — the observability number
@@ -2844,12 +2705,9 @@ def minhash_band_stats(
         num_hashes=num_hashes,
         id_col=id_col,
         text_col=text_col,
-        portable=portable,
         arrow=arrow,
     ).select("doc_id", "sig")
-    banded = _banded(
-        sigs, num_hashes=num_hashes, bands=bands, portable=portable
-    )
+    banded = _banded(sigs, num_hashes=num_hashes, bands=bands)
     buckets = banded.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("occupancy")
     )

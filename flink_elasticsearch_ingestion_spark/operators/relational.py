@@ -19,6 +19,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
@@ -2223,6 +2224,17 @@ def join_size_estimate(
     cb = right.groupBy(F.col(right_key).alias("k")).agg(
         F.count(F.lit(1)).alias("cb")
     )
+    # Keys of different numeric types (int 1 vs double 1.0) join under
+    # coercion but render as different text ('1' vs '1.0'); hashed apart
+    # they would void the never-underestimates contract.  Such keys hash
+    # the text of their double instead: keys equal under the join's
+    # coercion are equal as doubles (+ 0.0 folds -0.0 onto 0.0, as the
+    # join does).  Same-type keys keep their native text, and with it
+    # the oracle's hashes.
+    key_text = F.col("k").cast("string")
+    lt, rt = left.schema[left_key].dataType, right.schema[right_key].dataType
+    if lt != rt and isinstance(lt, NumericType) and isinstance(rt, NumericType):
+        key_text = (F.col("k").cast("double") + F.lit(0.0)).cast("string")
 
     def sketch(kc: DataFrame, cnt: str) -> DataFrame:
         fan = kc.select(
@@ -2236,7 +2248,7 @@ def join_size_estimate(
                     F.lit("jse"),
                     F.col("j").cast("string"),
                     F.lit(":"),
-                    F.col("k").cast("string"),
+                    key_text,
                 )
             )
             % width

@@ -771,7 +771,8 @@ def bootstrap_ci(
     # places the md5 expression in the Project ABOVE the Generate, so
     # it re-evaluates once per EXPLODED row — B x per input row
     # (measured at sf0.1: the explode stage alone cost 6.9 s vs 1.0 s
-    # with the two-step select; plans/r11/bootstrap_ci_{before,after}).
+    # with the two-step select; see the Generate input in the plan from
+    # ``python scripts/opt_measure.py --explain-only bootstrap_ci``).
     # Same expression, same values — only the projection boundary moves.
     exploded = (
         df.select(F.col(value_col).alias("x"), h.alias("h"))
@@ -831,7 +832,6 @@ def leakage_safe_folds(
     jaccard_threshold: float = 0.4,
     salt: str = "groupfold-v1",
     id_col: str = "doc_id",
-    portable: bool = False,
     band_cap: int | None = 1000,
 ) -> DataFrame:
     """Group-aware k-fold split: every member of a near-dup cluster
@@ -860,7 +860,6 @@ def leakage_safe_folds(
         documents,
         jaccard_threshold=jaccard_threshold,
         id_col=id_col,
-        portable=portable,
         band_cap=band_cap,
     ).persist()
     pairs.count()  # eager fill (see minhash_near_duplicates)
@@ -1028,7 +1027,6 @@ def cluster_weighted_sample(
     jaccard_threshold: float = 0.4,
     salt: str = "softdedup-v1",
     id_col: str = "doc_id",
-    portable: bool = False,
     band_cap: int | None = 1000,
 ) -> DataFrame:
     """Soft dedup by cluster-weighted sampling (the SemDeDup-family
@@ -1057,7 +1055,6 @@ def cluster_weighted_sample(
         documents,
         jaccard_threshold=jaccard_threshold,
         id_col=id_col,
-        portable=portable,
         band_cap=band_cap,
     ).persist()
     pairs.count()  # eager fill (see minhash_near_duplicates)

@@ -387,7 +387,6 @@ def stream_incremental_dedup(
     jaccard_threshold: float = 0.6,
     num_hashes: int = 16,
     bands: int = 8,
-    portable: bool = False,
 ):
     """Streaming corpus admission with cross-batch near-dup rejection —
     the production shape of the dedup pipeline: documents arrive as
@@ -426,9 +425,7 @@ def stream_incremental_dedup(
         ]
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signature_table(
-            batch_df, num_hashes=num_hashes, portable=portable
-        ).persist()
+        sigs = minhash_signature_table(batch_df, num_hashes=num_hashes).persist()
         sigs.count()  # eager fill (see minhash_near_duplicates)
         prior = [
             p for p in _store_batches(sig_store_path)
@@ -444,7 +441,6 @@ def stream_incremental_dedup(
             num_hashes=num_hashes,
             bands=bands,
             jaccard_threshold=jaccard_threshold,
-            portable=portable,
         )
         drop = dups.select(F.col("new_id").alias("doc_id")).distinct()
         survivors = batch_df.join(drop, "doc_id", "left_anti")

@@ -53,7 +53,6 @@ def admit_batch(
     num_hashes: int = 16,
     bands: int = 8,
     band_cap: int | None = None,
-    portable: bool = True,
     arrow: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -83,7 +82,7 @@ def admit_batch(
     sigs = batch_sigs
     if sigs is None:
         sigs = minhash_signature_table(
-            batch_docs, num_hashes=num_hashes, portable=portable,
+            batch_docs, num_hashes=num_hashes,
             arrow=arrow, id_col=id_col, text_col=text_col,
         )
     sigs = sigs.persist()
@@ -97,7 +96,6 @@ def admit_batch(
         bands=bands,
         jaccard_threshold=jaccard_threshold,
         band_cap=band_cap,
-        portable=portable,
     )
     drop = dups.select(F.col("new_id").alias(id_col)).distinct()
     survivors = batch_docs.join(drop, id_col, "left_anti")
@@ -112,7 +110,6 @@ def multi_poll_admission(
     jaccard_threshold: float = 0.4,
     num_hashes: int = 16,
     bands: int = 8,
-    portable: bool = True,
     arrow: bool = False,
 ) -> DataFrame:
     """Deterministic batch replay of the streaming admission pipeline:
@@ -131,7 +128,7 @@ def multi_poll_admission(
     store_sigs: DataFrame | None = None
     # shingle + minhash the corpus ONCE; each poll joins its slice
     all_sigs = minhash_signature_table(
-        docs, num_hashes=num_hashes, portable=portable, arrow=arrow
+        docs, num_hashes=num_hashes, arrow=arrow
     ).persist()
     all_sigs.count()
     cached = [all_sigs]
@@ -144,7 +141,6 @@ def multi_poll_admission(
             jaccard_threshold=jaccard_threshold,
             num_hashes=num_hashes,
             bands=bands,
-            portable=portable,
             batch_sigs=all_sigs.filter(F.col("doc_id") % n_polls == poll),
         )
         # localCheckpoint TRUNCATES the lineage: without it every poll's

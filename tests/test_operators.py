@@ -239,6 +239,17 @@ def test_ngram_jaccard_df_cap_bounds_hot_gram(spark):
     assert all_pairs.count() == 1
 
 
+def test_simhash_default_bits_spread_buckets(spark, sf_dir):
+    """SimHash features are 31-bit md5 hashes, so a signature bit at
+    position >= 31 never gets a positive vote. The default width must
+    stay within those 31 bits (a 64-bit signature put every document
+    in one bucket), and wider signatures are refused."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert D.simhash_buckets(docs).count() > 1
+    with pytest.raises(ValueError, match="31"):
+        D.simhash_buckets(docs, bits=64)
+
+
 def test_simhash_buckets_state_cap(spark):
     # 30 identical docs -> one bucket; doc_ids sample is capped at
     # max_ids while n_docs reports the exact membership.
@@ -598,23 +609,8 @@ def test_hybrid_search_rrf_fusion(spark):
     assert set(scores) == {1, 2, 3, 4}  # full-outer: single-arm docs kept
 
 
-def test_portable_minhash_finds_planted_near_dup(docs_with_dupes):
-    """The engine-portable (md5-31 + polynomial combine + affine perm)
-    hash family must find the same planted duplicates as the xxhash64
-    path — the oracle gate proves cross-engine parity; this pins the
-    recall contract."""
-    pairs = D.minhash_near_duplicates(
-        docs_with_dupes, jaccard_threshold=0.5, portable=True
-    )
-    found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    assert (0, 9000) in found
-    assert (1, 9001) in found
-    exact = [r.jaccard for r in pairs.collect() if (r.doc_a, r.doc_b) == (0, 9000)]
-    assert exact[0] == 1.0
-
-
 def test_portable_simhash_exact_copy_same_signature(docs_with_dupes):
-    sig = D.simhash_signature(docs_with_dupes, bits=24, portable=True)
+    sig = D.simhash_signature(docs_with_dupes, bits=24)
     by_id = {
         r.doc_id: r.simhash
         for r in sig.filter(F.col("doc_id").isin(0, 9000)).collect()
@@ -628,9 +624,7 @@ def test_portable_band_cap_still_bounds_degenerate_corpus(spark):
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"), F.lit(text).alias("text")
     )
-    pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.5, band_cap=cap, portable=True
-    )
+    pairs = D.minhash_near_duplicates(docs, jaccard_threshold=0.5, band_cap=cap)
     n_pairs = pairs.count()
     assert 0 < n_pairs <= cap * (cap - 1) // 2
 
@@ -643,11 +637,9 @@ def test_incremental_near_dup_planted(docs_with_dupes):
     is_new = F.col("doc_id") >= 9000
     corpus = docs_with_dupes.filter(~is_new)
     batch = docs_with_dupes.filter(is_new)
-    cs = D.minhash_signature_table(corpus, portable=True)
-    ns = D.minhash_signature_table(batch, portable=True)
-    out = D.near_duplicates_incremental(
-        cs, ns, jaccard_threshold=0.5, portable=True
-    )
+    cs = D.minhash_signature_table(corpus)
+    ns = D.minhash_signature_table(batch)
+    out = D.near_duplicates_incremental(cs, ns, jaccard_threshold=0.5)
     pairs = {(r.new_id, r.dup_id): r.jaccard for r in out.collect()}
     assert (9000, 0) in pairs and pairs[(9000, 0)] == 1.0
     assert (9001, 1) in pairs
@@ -659,16 +651,16 @@ def test_incremental_near_dup_equals_full_selfjoin_restriction(docs_with_dupes):
     """The operator's defining equivalence: incremental(new, corpus) ==
     full self-join over corpus+new restricted to pairs touching new."""
     is_new = F.col("doc_id") % 3 == 1
-    cs = D.minhash_signature_table(docs_with_dupes.filter(~is_new), portable=True)
-    ns = D.minhash_signature_table(docs_with_dupes.filter(is_new), portable=True)
+    cs = D.minhash_signature_table(docs_with_dupes.filter(~is_new))
+    ns = D.minhash_signature_table(docs_with_dupes.filter(is_new))
     inc = {
         (r.new_id, r.dup_id, r.jaccard)
         for r in D.near_duplicates_incremental(
-            cs, ns, jaccard_threshold=0.5, band_cap=None, portable=True
+            cs, ns, jaccard_threshold=0.5, band_cap=None
         ).collect()
     }
     full = D.minhash_near_duplicates(
-        docs_with_dupes, jaccard_threshold=0.5, band_cap=None, portable=True
+        docs_with_dupes, jaccard_threshold=0.5, band_cap=None
     )
     want = set()
     for r in full.collect():

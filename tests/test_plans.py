@@ -107,7 +107,7 @@ def test_top_orders_plans_takeordered(spark, sf_dir):
 
 
 def test_last_wins_is_partial_final_agg_not_window(spark, sf_dir):
-    """The default last-wins strategy must plan as partial+final
+    """Last-wins must plan as partial+final
     aggregation (map-side combine collapses duplicate doc_ids BEFORE
     the shuffle), never as a window over the fully-shuffled stream.
     Struct max buffers plan as SortAggregate; what matters is the
@@ -295,10 +295,9 @@ def test_event_trigrams_takeordered_topk(spark, sf_dir):
 
 
 def test_portable_minhash_band_join_single_wide_shuffle(spark, sf_dir):
-    """The portable (md5-family) minhash path must keep the xxhash64
-    path's plan shape: the band self-join is the ONLY fact-wide
-    shuffle, and the band-cap window reuses the join's (band_idx,
-    band_hash) partitioning instead of adding its own Exchange."""
+    """The md5-family minhash path keys its band self-join on the
+    exploded (band_idx, band_hash) pair and never falls back to a
+    cartesian product: the band join is the ONLY fact-wide shuffle."""
     plan = _physical(spark, "minhash_near_dup", sf_dir)
     assert "CartesianProduct" not in plan
     # the band join keys on the exploded (band_idx, band_hash) pair

@@ -85,12 +85,14 @@ def test_incremental_split_equals_full(spark, rows, split):
 def test_minhash_signature_estimates_jaccard(spark, a, overlap):
     """Signature slot agreement between two token sets approximates
     their true Jaccard: E[match fraction] = J; with 64 hashes the
-    error stays within ~4 sigma = 4*sqrt(J(1-J)/64) + slack."""
+    error stays within ~4 sigma = 4*sqrt(J(1-J)/64) + slack. The
+    signature is the md5-31 affine family over md5-31 token hashes."""
     b = a | overlap  # supersets give controllable overlap
     true_j = len(a & b) / len(a | b)
     df = spark.createDataFrame([(list(a),), (list(b),)], "toks array<string>")
+    hashed = F.array_distinct(F.transform(F.col("toks"), D.portable_hash31))
     sig = df.select(
-        D.minhash_signature(D.hashed_shingles(F.col("toks")), num_hashes=64).alias("sig")
+        D.portable_minhash_signature(hashed, num_hashes=64).alias("sig")
     ).collect()
     s1, s2 = sig[0].sig, sig[1].sig
     est = sum(1 for x, y in zip(s1, s2) if x == y) / 64

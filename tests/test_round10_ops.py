@@ -39,8 +39,8 @@ def test_arrow_signature_parity_fixture(spark, sf_dir, mode):
     measured scale twin (the 16-perm portable map stage was the linear
     124 s/sf10 constant under minhash_band_stats, SCALE.md r9)."""
     docs = load_table(spark, sf_dir, "documents")
-    e = D.minhash_signature_table(docs, portable=True, **mode)
-    a = D.minhash_signature_table(docs, portable=True, arrow=True, **mode)
+    e = D.minhash_signature_table(docs, **mode)
+    a = D.minhash_signature_table(docs, arrow=True, **mode)
     assert e.exceptAll(a).count() == 0
     assert a.exceptAll(e).count() == 0
     assert a.count() == docs.count()
@@ -54,21 +54,11 @@ def test_arrow_signature_parity_edge_cases(spark, mode):
     (Java \\s is ASCII-only — \\xa0 must survive as a token char),
     sub-k-token docs (the short-slice fold), and unicode lowercasing."""
     edge = _edge_df(spark)
-    e = D.minhash_signature_table(edge, portable=True, **mode).orderBy("doc_id")
+    e = D.minhash_signature_table(edge, **mode).orderBy("doc_id")
     a = D.minhash_signature_table(
-        edge, portable=True, arrow=True, **mode
+        edge, arrow=True, **mode
     ).orderBy("doc_id")
     assert e.collect() == a.collect()
-
-
-def test_arrow_signature_requires_portable(spark):
-    """arrow=True without portable=True fails loudly — the twin
-    replays the md5-31/affine family; xxhash64 has no Python-side
-    equivalent, and silently switching hash families would change
-    every downstream band key."""
-    df = _edge_df(spark)
-    with pytest.raises(ValueError, match="portable"):
-        D.minhash_signature_table(df, arrow=True)
 
 
 def test_arrow_near_duplicates_same_pairs(spark, sf_dir):
@@ -76,11 +66,9 @@ def test_arrow_near_duplicates_same_pairs(spark, sf_dir):
     join, exact-Jaccard verify) is identical when the signature stage
     runs on the arrow twin."""
     docs = load_table(spark, sf_dir, "documents")
-    e = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, portable=True, band_cap=None
-    )
+    e = D.minhash_near_duplicates(docs, jaccard_threshold=0.4, band_cap=None)
     a = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, portable=True, band_cap=None, arrow=True
+        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
     )
     assert sorted(map(tuple, e.collect())) == sorted(map(tuple, a.collect()))
 
@@ -361,8 +349,8 @@ def test_arrow_signature_parity_randomized_batch(spark):
         rows.append((str(i), "".join(parts)))
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     for mode in (dict(word_k=3), dict(word_k=None, shingle_k=4)):
-        e = D.minhash_signature_table(docs, portable=True, **mode).orderBy("doc_id")
+        e = D.minhash_signature_table(docs, **mode).orderBy("doc_id")
         a = D.minhash_signature_table(
-            docs, portable=True, arrow=True, **mode
+            docs, arrow=True, **mode
         ).orderBy("doc_id")
         assert e.collect() == a.collect(), mode

@@ -1,7 +1,7 @@
 """Round-11 additions: hermetic fake-ES HTTP server semantics
 (sources/es_testing.py — VERDICT r10 "Next round #2"), the real retry
-schedule over real HTTP, and the portable-vs-production hash-family
-recall parity sweep (VERDICT r10 #7).
+schedule over real HTTP, and the MinHash hash-family recall sweep
+against the banding S-curve (VERDICT r10 #7).
 """
 
 from __future__ import annotations
@@ -292,18 +292,18 @@ def test_arrow_pair_cosines_zero_norm_raises(spark):
 
 
 # ---------------------------------------------------------------------------
-# Portable-vs-production hash-family recall parity (VERDICT r10 #7):
-# the xxhash64 production family inherits the MEASURED recall of the
-# md5 portable family that planted_dup_recall pins, not just the
-# mechanism.
+# Hash-family recall parity with the banding S-curve (VERDICT r10 #7): the
+# md5-31 MinHash family recovers planted twins at the rate the LSH theory
+# predicts, not just by mechanism.
 # ---------------------------------------------------------------------------
 from flink_elasticsearch_ingestion_spark.operators import dedup as D
 
 
-def _planted_corpus(spark, keep_num, keep_den, n=300, seed=5):
-    """n seeded docs + one truncation twin each (first keep_num/keep_den
-    of its tokens) — the same planting recipe as planted_dup_recall
-    (dedup.py:2402), parameterized over the S-curve operating point."""
+def _planted_corpus(keep_num, keep_den, n=300, seed=5):
+    """(doc_id, text) rows: n seeded docs + one truncation twin each
+    (first keep_num/keep_den of its tokens) — the same planting recipe
+    as ``dedup.planted_dup_recall``, parameterized over the S-curve
+    operating point."""
     rng = np.random.RandomState(seed)
     vocab = [f"w{i}" for i in range(800)]
     rows = []
@@ -312,7 +312,26 @@ def _planted_corpus(spark, keep_num, keep_den, n=300, seed=5):
         keep = -(-len(toks) * keep_num // keep_den)  # ceil
         rows.append((i, " ".join(toks)))
         rows.append((i + 1_000_000, " ".join(toks[:keep])))
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return rows
+
+
+def _s_curve_recall(rows, threshold=0.4, rows_per_band=2, bands=8, k=3):
+    """Expected recall of the banded pipeline over the planted pairs:
+    each pair collides in some band with probability 1-(1-J^r)^b and
+    survives the exact verify iff J >= threshold."""
+    def grams(text):
+        t = text.split(" ")
+        return {tuple(t[i : i + k]) for i in range(max(len(t) - k + 1, 1))}
+
+    text = dict(rows)
+    probs = []
+    for doc_id, body in rows:
+        if doc_id >= 1_000_000:
+            continue
+        a, b = grams(body), grams(text[doc_id + 1_000_000])
+        j = round(len(a & b) / len(a | b), 6)
+        probs.append(1 - (1 - j**rows_per_band) ** bands if j >= threshold else 0.0)
+    return sum(probs) / len(probs)
 
 
 @pytest.mark.parametrize(
@@ -321,39 +340,30 @@ def _planted_corpus(spark, keep_num, keep_den, n=300, seed=5):
     ids=["j~0.9", "j~0.8", "j~0.6", "below-threshold"],
 )
 def test_hash_family_recall_parity(spark, keep_num, keep_den):
-    """Across the banding S-curve operating points, the production
-    xxhash64 family recovers the planted twins the portable md5 family
-    recovers: equal recall at the saturated ends (both 1.0 above the
-    curve, both 0 below the verify threshold), and within 5 points on
-    the slope (different random hash families differ only in banding
-    luck; the exact-jaccard verify bounds both from above identically).
-    """
-    corpus = _planted_corpus(spark, keep_num, keep_den)
+    """Across the banding S-curve operating points, the md5-31 MinHash
+    family (16 hashes, 8 bands) recovers the planted twins at the
+    recall the S-curve predicts: 1.0 above the curve, 0 below the
+    verify threshold, and within 5 points of 1-(1-J^2)^8 on the slope
+    (a random hash family differs from the expectation only in banding
+    luck; the exact-jaccard verify bounds it from above)."""
+    rows = _planted_corpus(keep_num, keep_den)
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
     n_planted = 300
-
-    def recall(portable: bool) -> float:
-        pairs = D.minhash_near_duplicates(
-            corpus,
-            jaccard_threshold=0.4,
-            band_cap=None,
-            portable=portable,
-            arrow=portable,  # arrow twin is portable-only
-        )
-        found = (
-            pairs.filter(F.col("doc_b") - F.col("doc_a") == 1_000_000)
-            .filter(F.col("doc_a") < 1_000_000)
-            .count()
-        )
-        return found / n_planted
-
-    r_portable = recall(True)
-    r_production = recall(False)
+    pairs = D.minhash_near_duplicates(
+        corpus, jaccard_threshold=0.4, band_cap=None, arrow=True
+    )
+    found = (
+        pairs.filter(F.col("doc_b") - F.col("doc_a") == 1_000_000)
+        .filter(F.col("doc_a") < 1_000_000)
+        .count()
+    )
+    recall = found / n_planted
     if keep_den == 5 and keep_num == 1:
-        assert r_portable == r_production == 0.0  # below verify threshold
+        assert recall == 0.0  # below verify threshold
     elif keep_num == 9:
-        assert r_portable == r_production == 1.0  # saturated top of curve
+        assert recall == 1.0  # saturated top of curve
     else:
-        # the slope: banding hit probability 1-(1-j^b)^r < 1, so each
-        # family may miss a handful of twins — independently
-        assert r_portable > 0.9 and r_production > 0.9
-        assert abs(r_portable - r_production) <= 0.05
+        # the slope: banding hit probability 1-(1-j^r)^b < 1, so the
+        # family may miss a handful of twins
+        assert recall > 0.9
+        assert abs(recall - _s_curve_recall(rows)) <= 0.05

@@ -212,7 +212,7 @@ def test_quality_survivor_beats_min_id(spark):
         ],
         "doc_id long, text string",
     )
-    kw = dict(jaccard_threshold=0.5, portable=True, band_cap=None)
+    kw = dict(jaccard_threshold=0.5, band_cap=None)
     legacy = {
         r.component: r.keep_doc_id for r in near_dup_clusters(docs, **kw).collect()
     }

@@ -166,7 +166,7 @@ def test_kneser_ney_is_a_proper_distribution(spark):
 
 def test_leakage_safe_folds_partition_and_zero_leaks(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    out = leakage_safe_folds(docs, k=5, jaccard_threshold=0.4, portable=True,
+    out = leakage_safe_folds(docs, k=5, jaccard_threshold=0.4,
                              band_cap=None).collect()
     assert sum(r["n_docs"] for r in out) == docs.count()
     assert all(r["n_leaky_pairs"] == 0 for r in out)
@@ -237,7 +237,7 @@ def test_containment_catches_quotes_symmetric_misses(spark):
     assert (2, 1) not in got  # asymmetric: the long doc is NOT contained
     assert not any(3 in p for p in got)
     # the symmetric pass at the same grain misses it
-    sym = minhash_near_duplicates(df, jaccard_threshold=0.6, portable=True).collect()
+    sym = minhash_near_duplicates(df, jaccard_threshold=0.6).collect()
     assert not any({r["doc_a"], r["doc_b"]} == {1, 2} for r in sym)
 
 

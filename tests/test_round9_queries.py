@@ -133,15 +133,15 @@ def test_minhash_band_stats_budget_matches_pair_join(spark, sf_dir):
     from flink_elasticsearch_ingestion_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(120)
-    stats = minhash_band_stats(docs, portable=True)
+    stats = minhash_band_stats(docs)
     budget = {
         r["band_idx"]: r["total"]
         for r in stats.groupBy("band_idx")
         .agg(F.sum("candidate_pairs").alias("total"))
         .collect()
     }
-    sigs = minhash_signature_table(docs, portable=True).select("doc_id", "sig")
-    banded = _banded(sigs, num_hashes=16, bands=8, portable=True)
+    sigs = minhash_signature_table(docs).select("doc_id", "sig")
+    banded = _banded(sigs, num_hashes=16, bands=8)
     a, b = banded.alias("a"), banded.alias("b")
     real = (
         a.join(

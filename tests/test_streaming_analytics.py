@@ -371,7 +371,7 @@ def test_stream_incremental_dedup_rejects_cross_batch_dupes(tmp_path, spark):
     accepted = str(tmp_path / "accepted")
     q = stream_incremental_dedup(
         spark, src, sig_store, accepted, str(tmp_path / "ck_dedup"),
-        jaccard_threshold=0.5, portable=True,
+        jaccard_threshold=0.5,
     )
     q.awaitTermination(120)
 
