@@ -609,6 +609,21 @@ def test_hybrid_search_rrf_fusion(spark):
     assert set(scores) == {1, 2, 3, 4}  # full-outer: single-arm docs kept
 
 
+def test_portable_minhash_finds_planted_near_dup(docs_with_dupes):
+    """The engine-portable (md5-31 + polynomial combine + affine perm)
+    hash family must find the planted duplicates on its vectorized
+    signature build too — the oracle gate proves cross-engine parity;
+    this pins the recall contract."""
+    pairs = D.minhash_near_duplicates(
+        docs_with_dupes, jaccard_threshold=0.5, arrow=True
+    )
+    found = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    assert (0, 9000) in found
+    assert (1, 9001) in found
+    exact = [r.jaccard for r in pairs.collect() if (r.doc_a, r.doc_b) == (0, 9000)]
+    assert exact[0] == 1.0
+
+
 def test_portable_simhash_exact_copy_same_signature(docs_with_dupes):
     sig = D.simhash_signature(docs_with_dupes, bits=24)
     by_id = {
