@@ -68,41 +68,56 @@ class Engine:
         return run_incremental_batch(events, sink, CheckpointStore(checkpoint_path))
 
     def copy_run_bulk(self, checkpoint_path: str, bulk_path: str) -> int:
-        """``copy_run`` writing through the ``es_bulk`` DataSource
-        instead of parquet: the output directory holds the literal
-        ``/_bulk`` payload files a replay tool POSTs to a live cluster
-        — the complete reference job (incremental scan -> emitter ->
-        last-wins -> bulk sink) with the sink half in its native wire
-        format."""
+        """``copy_run`` writing ``/_bulk`` wire-format payload files
+        (``sources.es_bulk.write_bulk``) instead of parquet: the output
+        directory holds the literal payload a replay tool POSTs to a
+        live cluster — the complete reference job (incremental scan ->
+        emitter -> last-wins -> bulk sink -> "store timestamp of last
+        doc", core.clj:72, 137). Returns the documents written.
+
+        One Spark pass per call: the checkpoint's ``max(ts)`` (and
+        ``max(ts_ns)`` for sources carrying raw nanoseconds, the exact
+        offset ``CheckpointStore`` documents) is an ``Observation``
+        riding in the write's own job, read only after the write
+        returned — a failed write raises before the checkpoint moves.
+        A poll with nothing new writes no manifest and leaves the
+        checkpoint alone."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         from flink_elasticsearch_ingestion_spark.functions.json_shaping import (
             encode_body,
         )
         from flink_elasticsearch_ingestion_spark.operators.copy import (
             BODY_COLS,
             incremental_copy,
-            max_ts_checkpoint,
         )
-        from flink_elasticsearch_ingestion_spark.sources.es_bulk import (
-            register_bulk_sink,
-        )
+        from flink_elasticsearch_ingestion_spark.sources.es_bulk import write_bulk
         from flink_elasticsearch_ingestion_spark.streaming.shell import (
             CheckpointStore,
         )
 
-        register_bulk_sink(self.spark)
         store = CheckpointStore(checkpoint_path)
         events = self.table("events")
-        docs = encode_body(
-            incremental_copy(events, checkpoint_ts=store.load()), BODY_COLS
-        ).select("doc_id", "index_id", "source", "ts")
-        docs = docs.persist()
-        n = docs.count()  # eager: sink write + checkpoint agg both consume
+        has_ns = "ts_ns" in events.columns
+        ck_ns = store.load_ns() if has_ns else None
+        if has_ns:
+            # observed below the ts filters: max over the full slice
+            # equals max over the rows that pass whenever any row does
+            if ck_ns is not None:
+                events = events.filter(F.col("ts_ns") > F.lit(ck_ns))
+            ns_obs = Observation()
+            events = events.observe(ns_obs, F.max("ts_ns").alias("max_ns"))
+        if ck_ns is not None:
+            docs = incremental_copy(events, checkpoint_ns=ck_ns)
+        else:
+            docs = incremental_copy(events, checkpoint_ts=store.load())
+        ts_obs = Observation()
+        docs = encode_body(docs, BODY_COLS).observe(ts_obs, F.max("ts").alias("max_ts"))
+        n = write_bulk(docs, bulk_path)
         if n:
-            docs.select("doc_id", "index_id", "source").write.format(
-                "es_bulk"
-            ).mode("append").option("path", bulk_path).save()
-            max_ts = max_ts_checkpoint(docs).first()["checkpoint_ts"]
-            store.save(max_ts.isoformat(sep=" "))
-        docs.unpersist()
+            store.save(
+                ts_obs.get["max_ts"].isoformat(sep=" "),
+                checkpoint_ns=ns_obs.get["max_ns"] if has_ns else None,
+            )
         return n
-

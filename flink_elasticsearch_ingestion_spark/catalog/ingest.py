@@ -80,7 +80,7 @@ def q_bulk_chunks_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end through the REAL write path: shape events into
-    documents, write them with ``df.write.format("es_bulk")`` (executor
+    documents, write them with ``es_bulk.write_bulk`` (executor
     chunking, 64-action files, manifest-gated commit), parse the
     committed NDJSON payload back DISTRIBUTED (manifest-listed chunk
     scan + JVM-side line pairing, no driver loop), and aggregate per index from
@@ -92,10 +92,9 @@ def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_elasticsearch_ingestion_spark.functions.json_shaping import encode_body
     from flink_elasticsearch_ingestion_spark.sources.es_bulk import (
         read_bulk_payload_df,
-        register_bulk_sink,
+        write_bulk,
     )
 
-    register_bulk_sink(spark)
     # deterministic 5% slice keeps the written-file count bounded while
     # still exercising the full write path (chunking, manifest,
     # parse-back); the oracle applies the same residue
@@ -104,7 +103,7 @@ def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "index_id", "source"
     )
     out = tempfile.mkdtemp(prefix="es_bulk_roundtrip_")
-    docs.write.format("es_bulk").mode("overwrite").option("path", out).save()
+    write_bulk(docs, out, overwrite=True)
     back = read_bulk_payload_df(spark, out)
     return (
         back.select(

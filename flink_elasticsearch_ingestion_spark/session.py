@@ -15,6 +15,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """Driver heap: 24g, capped at half the host's physical memory. In
+    local mode the driver JVM is the whole executor, so a fixed 24g on
+    a 16 GB host lets two sessions (a test run next to an oracle check)
+    grow until the kernel kills one."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (AttributeError, ValueError, OSError):
+        return "24g"
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "flink_elasticsearch_ingestion_spark",
     master: str | None = None,
@@ -47,7 +59,10 @@ def get_spark(
         # Python DataSource V2 filter pushdown (es_scroll's ts-range
         # checkpoint predicate evaluates inside the source reader)
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         # a long-lived session compiles one codegen class per plan
         # stage; a few hundred distinct queries overflow JDK17's 240 MB
         # default ReservedCodeCacheSize, the JIT shuts off, and
@@ -69,8 +84,9 @@ def ship_package(spark: SparkSession) -> None:
     regardless of the driver process's cwd / PYTHONPATH.
 
     Anything pickled BY REFERENCE (module-level functions handed to
-    ``mapInPandas``, the es_bulk/es_scroll DataSource classes, UDTF
-    classes) requires the worker's Python to ``import
+    ``mapInPandas``/``mapInArrow`` such as the es_bulk chunk writer,
+    the es_bulk/es_scroll DataSource classes, UDTF classes) requires
+    the worker's Python to ``import
     flink_elasticsearch_ingestion_spark`` — which fails when the
     driving process found the repo via a ``sys.path`` insert the
     workers never saw. Shipping the package once per SparkContext via

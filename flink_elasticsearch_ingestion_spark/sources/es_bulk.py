@@ -1,49 +1,53 @@
-"""Custom Python DataSource WRITER emitting the Elasticsearch ``_bulk``
-wire format — the sink half of the reference (core.clj:55-79) as a real
-``df.write.format("es_bulk")`` path.
+"""Elasticsearch ``_bulk`` wire-format sink — the sink half of the
+reference (core.clj:55-79).
 
 The reference's sink builds ``IndexRequest(id=doc_id, index=index_id,
 body=source-json)`` and hands them to a BulkProcessor flushing every 64
-actions. This writer produces the exact bytes such a processor sends:
+actions. This sink produces the exact bytes such a processor sends:
 NDJSON action/body line pairs ::
 
     {"index": {"_index": "<index_id>", "_id": "<doc_id>"}}
     {...source JSON...}
 
-chunked into one file per (partition, flush) with at most
-``max_actions`` actions each — so a replay tool can POST each file to a
-live cluster's ``/_bulk`` verbatim. What this exercises beyond the
-option-dict connector config (``sinks.elasticsearch_writer_options``):
-the full V2 writer lifecycle — per-task ``write`` on executors,
-task-level commit messages carrying (files, actions) counts, driver
-``commit`` writing a manifest only after every task succeeded (the
-all-or-nothing visibility contract), ``abort`` leaving no manifest.
+chunked into one file per (task, flush) with at most ``max_actions``
+actions each — so a replay tool can POST each file to a live cluster's
+``/_bulk`` verbatim. A manifest naming the committed files is written
+driver-side only after every task succeeded: consumers
+(:func:`read_bulk_payload`) see all of a write or none of it.
 
-Same format streams: ``writeStream.format("es_bulk")`` uses the
-micro-batch writer (one commit per epoch), mirroring the reference's
-unbounded job writing through the same bulk processor.
+Two entry points share the chunk writer:
+
+- batch: :func:`write_bulk` — ONE Spark job (``mapInArrow`` tasks write
+  the chunks and return ``(files, n_actions)``; the driver collects
+  them and writes one ``_MANIFEST-job-<tag>.json``). An ``Observation``
+  on the input rides in the same job, so a caller gets its counters
+  without a second pass.
+- streaming: ``writeStream.format("es_bulk")`` — the Python DataSource
+  micro-batch writer, one ``_MANIFEST-<epoch>.json`` per epoch,
+  mirroring the reference's unbounded job writing through the same
+  bulk processor. The DataSource is stream-only.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import functools
 import json
 import os
 import uuid
 from typing import Iterator
 
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamWriter,
-    DataSourceWriter,
     WriterCommitMessage,
 )
 from pyspark.sql.types import Row, StructType
 
 #: reference bulk flush size (core.clj:72)
 DEFAULT_MAX_ACTIONS = 64
-
-MANIFEST = "_MANIFEST.json"
 
 
 @dataclasses.dataclass
@@ -82,9 +86,7 @@ def _write_chunks(path: str, rows: Iterator[Row], max_actions: int, tag: str):
     return BulkCommit(files=files, n_actions=n)
 
 
-def _write_manifest(
-    path: str, messages, name: str = MANIFEST, extra: dict | None = None
-) -> None:
+def _write_manifest(path: str, messages, name: str, extra: dict | None = None) -> None:
     files: list[str] = []
     total = 0
     for m in messages:
@@ -97,38 +99,59 @@ def _write_manifest(
         json.dump(manifest, fh)
 
 
-class EsBulkWriter(DataSourceWriter):
-    def __init__(self, options, overwrite: bool = False):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("es_bulk requires option 'path'")
-        self.max_actions = int(options.get("max_actions", str(DEFAULT_MAX_ACTIONS)))
-        self.overwrite = overwrite
-        # one manifest PER JOB (mirrors the streaming path's per-epoch
-        # manifests): a second append run must not clobber the first
-        # run's manifest, or its committed documents silently vanish
-        # from read_bulk_payload
-        self.job_tag = uuid.uuid4().hex[:12]
+_TASK_COMMIT = pa.schema([("files", pa.list_(pa.string())), ("n_actions", pa.int64())])
 
-    def write(self, iterator: Iterator[Row]) -> BulkCommit:
-        return _write_chunks(
-            self.path, iterator, self.max_actions, uuid.uuid4().hex[:12]
+
+def _write_task(path: str, max_actions: int, batches: Iterator[pa.RecordBatch]):
+    """``mapInArrow`` body: one task's chunk files, reported as a
+    single ``(files, n_actions)`` row for the driver-side commit."""
+    rows = (row for batch in batches for row in batch.to_pylist())
+    c = _write_chunks(path, rows, max_actions, uuid.uuid4().hex[:12])
+    yield pa.RecordBatch.from_pylist(
+        [{"files": c.files, "n_actions": c.n_actions}], schema=_TASK_COMMIT
+    )
+
+
+def write_bulk(
+    df: DataFrame,
+    path: str,
+    *,
+    max_actions: int = DEFAULT_MAX_ACTIONS,
+    overwrite: bool = False,
+) -> int:
+    """Write ``df``'s ``(doc_id, index_id, source)`` as ``/_bulk`` chunk
+    files under ``path`` in one Spark job; returns the actions written.
+
+    Every task's ``(files, n_actions)`` is collected before the
+    manifest is written, so a failed task raises here with no manifest
+    (the payload stays invisible). One manifest per call
+    (``_MANIFEST-job-<tag>.json``): a second append must not clobber
+    the first call's manifest, or its committed documents vanish from
+    :func:`read_bulk_payload`. ``overwrite=True`` drops every earlier
+    manifest at commit, so only this call's files stay visible (orphaned
+    chunk files are invisible by contract). A call that writes nothing
+    writes no manifest."""
+    from flink_elasticsearch_ingestion_spark.session import ship_package
+
+    # _write_task is pickled by reference: workers must import the package
+    ship_package(df.sparkSession)
+    os.makedirs(path, exist_ok=True)
+    commits = (
+        df.select("doc_id", "index_id", "source")
+        .mapInArrow(
+            functools.partial(_write_task, path, max_actions),
+            "files array<string>, n_actions bigint",
         )
-
-    def commit(self, messages) -> None:
-        if self.overwrite:
-            # overwrite visibility flips atomically at commit: drop every
-            # prior manifest so only this job's files are payload-visible
-            # (orphaned chunk files are invisible by contract)
-            for f in os.listdir(self.path):
-                if f.startswith("_MANIFEST") and f.endswith(".json"):
-                    os.remove(os.path.join(self.path, f))
-        _write_manifest(self.path, messages, name=f"_MANIFEST-job-{self.job_tag}.json")
-
-    def abort(self, messages) -> None:
-        # no manifest -> the output is invisible to consumers; stray
-        # chunk files from failed tasks are ignorable by contract
-        pass
+        .collect()
+    )
+    if overwrite:
+        for f in os.listdir(path):
+            if f.startswith("_MANIFEST") and f.endswith(".json"):
+                os.remove(os.path.join(path, f))
+    n = sum(c.n_actions for c in commits)
+    if n:
+        _write_manifest(path, commits, name=f"_MANIFEST-job-{uuid.uuid4().hex[:12]}.json")
+    return n
 
 
 class EsBulkStreamWriter(DataSourceStreamWriter):
@@ -164,9 +187,6 @@ class EsBulkDataSource(DataSource):
 
     def schema(self) -> str:
         return "doc_id string, index_id string, source string"
-
-    def writer(self, schema: StructType, overwrite: bool) -> EsBulkWriter:
-        return EsBulkWriter(self.options, overwrite=overwrite)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> EsBulkStreamWriter:
         return EsBulkStreamWriter(self.options)
@@ -245,7 +265,7 @@ def read_bulk_payload_df(spark, path: str):
 def read_bulk_payload(path: str) -> list[tuple[dict, str]]:
     """Parse every COMMITTED chunk back into (action, body) pairs —
     the test-side consumer standing in for a live ``/_bulk`` endpoint.
-    Only files named by a manifest count (batch ``_MANIFEST.json`` and
+    Only files named by a manifest count (batch ``_MANIFEST-job-<tag>.json`` and
     per-epoch ``_MANIFEST-<n>.json``); uncommitted stragglers are
     invisible, which is the point of the manifest."""
     files: list[str] = []

@@ -219,9 +219,7 @@ def stream_scroll_ingest_pipeline(
     content-equality grain an index copy must preserve.
     """
     from flink_elasticsearch_ingestion_spark.operators.copy import last_wins
-    from flink_elasticsearch_ingestion_spark.sources.es_bulk import (
-        register_bulk_sink,
-    )
+    from flink_elasticsearch_ingestion_spark.sources.es_bulk import write_bulk
     from flink_elasticsearch_ingestion_spark.sources.es_scroll import (
         register_scroll_source,
     )
@@ -230,7 +228,6 @@ def stream_scroll_ingest_pipeline(
     )
 
     register_scroll_source(spark)
-    register_bulk_sink(spark)
     sig_store = os.path.join(work_dir, "sigstore")
     accepted = VersionedTable(spark, os.path.join(work_dir, "accepted"))
     monitor = os.path.join(work_dir, "monitor")
@@ -290,13 +287,7 @@ def stream_scroll_ingest_pipeline(
             "epoch long, n_seen long, n_unique long, n_admitted long,"
             " n_rejected long, admitted_chars long, max_ts string",
         ).write.mode("overwrite").parquet(f"{monitor}/batch={batch_id}")
-        (
-            survivors.select("doc_id", "index_id", "source")
-            .write.format("es_bulk")
-            .mode("overwrite")
-            .option("path", f"{bulk_out}/batch={batch_id}")
-            .save()
-        )
+        write_bulk(survivors, f"{bulk_out}/batch={batch_id}", overwrite=True)
         # release every per-epoch cache: a continuous processingTime
         # stream runs this for the life of the query, and one pinned
         # DataFrame per micro-batch is a slow memory leak

@@ -121,3 +121,14 @@ def test_es_writer_options_full_reference_contract():
     assert cfg.backoff_policy == "EXPONENTIAL"
     # every emitted key is a real elasticsearch-hadoop option namespace
     assert all(k.startswith("es.") for k in opts)
+
+
+def test_default_driver_memory_is_half_the_host_capped_at_24g(monkeypatch):
+    from flink_elasticsearch_ingestion_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(session.os, "sysconf", lambda k: pages[k])
+    pages["SC_PHYS_PAGES"] = 16 * 2**30 // 4096  # 16 GB host
+    assert session.default_driver_memory() == "8192m"
+    pages["SC_PHYS_PAGES"] = 256 * 2**30 // 4096
+    assert session.default_driver_memory() == "24576m"

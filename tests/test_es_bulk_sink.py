@@ -1,5 +1,6 @@
-"""es_bulk Python DataSource writer: ES _bulk wire format, 64-action
-chunking, manifest-gated visibility, batch + streaming paths."""
+"""es_bulk sink: ES _bulk wire format, 64-action chunking,
+manifest-gated visibility; batch ``write_bulk`` + the streaming
+DataSource writer."""
 
 import json
 import os
@@ -15,6 +16,7 @@ from flink_elasticsearch_ingestion_spark.operators.copy import (
 from flink_elasticsearch_ingestion_spark.sources.es_bulk import (
     EsBulkDataSource,
     read_bulk_payload,
+    write_bulk,
 )
 from flink_elasticsearch_ingestion_spark.sources.tables import load_events
 
@@ -26,10 +28,9 @@ def _docs(spark, sf_dir):
 
 
 def test_bulk_write_round_trips_wire_format(tmp_path, spark, sf_dir):
-    spark.dataSource.register(EsBulkDataSource)
     docs = _docs(spark, sf_dir)
     out = str(tmp_path / "bulk_out")
-    docs.write.format("es_bulk").mode("append").option("path", out).save()
+    write_bulk(docs, out)
     payload = read_bulk_payload(out)
     assert len(payload) == docs.count()
     # every action routes by (index_id, doc_id) exactly as the
@@ -44,16 +45,9 @@ def test_bulk_write_round_trips_wire_format(tmp_path, spark, sf_dir):
 
 
 def test_bulk_chunks_respect_max_actions(tmp_path, spark, sf_dir):
-    spark.dataSource.register(EsBulkDataSource)
     docs = _docs(spark, sf_dir).repartition(3)
     out = str(tmp_path / "bulk_chunked")
-    (
-        docs.write.format("es_bulk")
-        .mode("append")
-        .option("path", out)
-        .option("max_actions", "64")
-        .save()
-    )
+    write_bulk(docs, out, max_actions=64)
     manifests = [f for f in os.listdir(out) if f.startswith("_MANIFEST-job-")]
     assert len(manifests) == 1  # one batch job -> one job manifest
     with open(os.path.join(out, manifests[0])) as fh:
@@ -71,13 +65,12 @@ def test_two_append_runs_both_stay_visible(tmp_path, spark, sf_dir):
     # regression (round-2 advice): a second incremental run used to
     # overwrite the first run's fixed-name manifest, silently dropping
     # the earlier documents from the committed payload
-    spark.dataSource.register(EsBulkDataSource)
     docs = _docs(spark, sf_dir)
     first = docs.limit(10)
     second = docs.subtract(first).limit(7)
     out = str(tmp_path / "bulk_two_runs")
-    first.write.format("es_bulk").mode("append").option("path", out).save()
-    second.write.format("es_bulk").mode("append").option("path", out).save()
+    write_bulk(first, out)
+    write_bulk(second, out)
     payload = read_bulk_payload(out)
     assert len(payload) == 17
     got_ids = {a["index"]["_id"] for a, _ in payload}
@@ -88,12 +81,11 @@ def test_two_append_runs_both_stay_visible(tmp_path, spark, sf_dir):
 
 
 def test_overwrite_run_replaces_previous_payload(tmp_path, spark, sf_dir):
-    spark.dataSource.register(EsBulkDataSource)
     docs = _docs(spark, sf_dir)
     out = str(tmp_path / "bulk_overwrite")
-    docs.limit(10).write.format("es_bulk").mode("append").option("path", out).save()
+    write_bulk(docs.limit(10), out)
     replacement = docs.limit(3)
-    replacement.write.format("es_bulk").mode("overwrite").option("path", out).save()
+    write_bulk(replacement, out, overwrite=True)
     payload = read_bulk_payload(out)
     assert len(payload) == 3
     assert {a["index"]["_id"] for a, _ in payload} == {
@@ -169,13 +161,12 @@ def test_streaming_epoch_replay_is_idempotent(tmp_path, spark, sf_dir):
 def test_full_reference_pipeline_scan_to_bulk(tmp_path, spark, sf_dir):
     """The reference's whole job in one statement: incremental scan ->
     emitter projection -> last-wins -> bulk-format sink."""
-    spark.dataSource.register(EsBulkDataSource)
     events = load_events(spark, sf_dir)
     docs = encode_body(
         incremental_copy(events, checkpoint_ts="2024-01-15 00:00:00"), BODY_COLS
     ).select("doc_id", "index_id", "source")
     out = str(tmp_path / "bulk_pipeline")
-    docs.write.format("es_bulk").mode("append").option("path", out).save()
+    write_bulk(docs, out)
     assert len(read_bulk_payload(out)) == docs.count()
 
 
@@ -196,20 +187,79 @@ def test_engine_copy_run_bulk_incremental_resume(tmp_path, spark, sf_dir):
     assert len(read_bulk_payload(out)) == n1
 
 
+def test_copy_run_bulk_is_one_pass(tmp_path, spark, sf_dir):
+    """A copy poll is scan -> last-wins -> bulk write in one pass: the
+    checkpoint's max(ts) rides in the write's job (no count, no
+    max-ts job, no persist)."""
+    from flink_elasticsearch_ingestion_spark.api import Engine
+
+    eng = Engine(sf_dir, spark=spark)
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    jobs_before = status.jobsList(None).size()
+    cached_before = set(sc._jsc.getPersistentRDDs().keySet())
+    n = eng.copy_run_bulk(str(tmp_path / "ck.json"), str(tmp_path / "bulk"))
+    assert n > 0
+    assert status.jobsList(None).size() - jobs_before <= 3
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before
+
+
+def test_copy_run_bulk_ns_checkpoint_boundary_not_lost(tmp_path, spark, sf_dir):
+    """A nanosecond source: an event later than the checkpoint but in
+    the same microsecond must still be copied by the next poll (a
+    us-grain offset with a strict ``>`` would skip it forever)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_elasticsearch_ingestion_spark.api import Engine
+
+    sf = tmp_path / "sf"
+    (sf / "events.parquet").mkdir(parents=True)
+    for f in os.listdir(sf_dir):
+        if f != "events.parquet":
+            os.symlink(os.path.join(sf_dir, f), sf / f)
+    base_ns = 1_700_000_000_000_000_000  # us-aligned
+
+    def write_events(name, rows):
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([i for i, _ in rows], pa.int64()),
+                    "ts": pa.array([ns for _, ns in rows], pa.timestamp("ns")),
+                    "user_id": pa.array([1] * len(rows), pa.int64()),
+                    "event_type": ["click"] * len(rows),
+                    "value": [1.0] * len(rows),
+                    "props": ["{}"] * len(rows),
+                }
+            ),
+            sf / "events.parquet" / name,
+        )
+
+    write_events("part-0.parquet", [(1, base_ns + 100), (2, base_ns + 1_000_100)])
+    eng = Engine(str(sf), spark=spark)
+    ck = str(tmp_path / "ck.json")
+    out = str(tmp_path / "bulk")
+    assert eng.copy_run_bulk(ck, out) == 2
+    # the late event truncates to the checkpoint's microsecond
+    write_events("delta-1.parquet", [(3, base_ns + 1_000_600)])
+    assert eng.copy_run_bulk(ck, out) == 1
+    assert eng.copy_run_bulk(ck, out) == 0
+    assert sorted(a["index"]["_id"] for a, _ in read_bulk_payload(out)) == [1, 2, 3]
+
+
 def test_failed_write_commits_no_manifest(tmp_path, spark):
     """A task failure mid-write must abort the job with NO manifest —
     consumers see nothing, not a partial payload (the all-or-nothing
     visibility the reference's bulk retry loop approximates)."""
     import pytest
 
-    spark.dataSource.register(EsBulkDataSource)
     out = str(tmp_path / "bulk_fail")
     bad = spark.createDataFrame(
         [("a", "i", "{}"), ("b", "i", None)],  # null source -> TypeError in writer
         "doc_id string, index_id string, source string",
     ).coalesce(1)
     with pytest.raises(Exception):
-        bad.write.format("es_bulk").mode("append").option("path", out).save()
+        write_bulk(bad, out)
     if os.path.isdir(out):
         assert not [f for f in os.listdir(out) if f.startswith("_MANIFEST")]
         assert read_bulk_payload(out) == []
@@ -223,10 +273,9 @@ def test_distributed_payload_reader_matches_driver_reader(tmp_path, spark, sf_di
         read_bulk_payload_df,
     )
 
-    spark.dataSource.register(EsBulkDataSource)
     docs = _docs(spark, sf_dir)
     out = str(tmp_path / "bulk_dist")
-    docs.write.format("es_bulk").mode("append").option("path", out).save()
+    write_bulk(docs, out)
     # plant an uncommitted straggler chunk: valid wire format, no manifest
     with open(os.path.join(out, "bulk-straggler-00000.ndjson"), "w") as fh:
         fh.write('{"index":{"_index":"ghost","_id":"999999"}}\n{"x":1}\n')

@@ -188,13 +188,9 @@ def test_epoch_replay_is_idempotent(tmp_path, spark, sf_dir):
     VersionedTable(spark, f"{work}/accepted").commit(
         survivors.drop("n_chars"), version=0
     )
-    (
-        survivors.select("doc_id", "index_id", "source")
-        .write.format("es_bulk")
-        .mode("overwrite")
-        .option("path", f"{work}/bulk/batch=0")
-        .save()
-    )
+    from flink_elasticsearch_ingestion_spark.sources.es_bulk import write_bulk
+
+    write_bulk(survivors, f"{work}/bulk/batch=0", overwrite=True)
     assert snapshot() == before
 
 
