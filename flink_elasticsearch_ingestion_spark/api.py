@@ -56,7 +56,8 @@ class Engine:
 
     def copy_run(self, checkpoint_path: str, sink_path: str) -> int:
         """The reference's headline behavior as one call: incremental
-        batch copy of the event stream with a persisted ts offset."""
+        batch copy of the event stream with a persisted ts offset, in
+        one Spark pass per call (``run_incremental_batch``)."""
         from flink_elasticsearch_ingestion_spark.sources.sinks import ParquetSink
         from flink_elasticsearch_ingestion_spark.streaming.shell import (
             CheckpointStore,
@@ -75,49 +76,26 @@ class Engine:
         emitter -> last-wins -> bulk sink -> "store timestamp of last
         doc", core.clj:72, 137). Returns the documents written.
 
-        One Spark pass per call: the checkpoint's ``max(ts)`` (and
+        One Spark pass per call (``streaming.shell.checkpointed_copy``,
+        shared with ``copy_run``): the checkpoint's ``max(ts)`` (and
         ``max(ts_ns)`` for sources carrying raw nanoseconds, the exact
         offset ``CheckpointStore`` documents) is an ``Observation``
         riding in the write's own job, read only after the write
         returned — a failed write raises before the checkpoint moves.
         A poll with nothing new writes no manifest and leaves the
         checkpoint alone."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
         from flink_elasticsearch_ingestion_spark.functions.json_shaping import (
             encode_body,
         )
-        from flink_elasticsearch_ingestion_spark.operators.copy import (
-            BODY_COLS,
-            incremental_copy,
-        )
+        from flink_elasticsearch_ingestion_spark.operators.copy import BODY_COLS
         from flink_elasticsearch_ingestion_spark.sources.es_bulk import write_bulk
         from flink_elasticsearch_ingestion_spark.streaming.shell import (
             CheckpointStore,
+            checkpointed_copy,
         )
 
-        store = CheckpointStore(checkpoint_path)
-        events = self.table("events")
-        has_ns = "ts_ns" in events.columns
-        ck_ns = store.load_ns() if has_ns else None
-        if has_ns:
-            # observed below the ts filters: max over the full slice
-            # equals max over the rows that pass whenever any row does
-            if ck_ns is not None:
-                events = events.filter(F.col("ts_ns") > F.lit(ck_ns))
-            ns_obs = Observation()
-            events = events.observe(ns_obs, F.max("ts_ns").alias("max_ns"))
-        if ck_ns is not None:
-            docs = incremental_copy(events, checkpoint_ns=ck_ns)
-        else:
-            docs = incremental_copy(events, checkpoint_ts=store.load())
-        ts_obs = Observation()
-        docs = encode_body(docs, BODY_COLS).observe(ts_obs, F.max("ts").alias("max_ts"))
-        n = write_bulk(docs, bulk_path)
-        if n:
-            store.save(
-                ts_obs.get["max_ts"].isoformat(sep=" "),
-                checkpoint_ns=ns_obs.get["max_ns"] if has_ns else None,
-            )
-        return n
+        docs, commit = checkpointed_copy(
+            self.table("events"), CheckpointStore(checkpoint_path)
+        )
+        write_bulk(encode_body(docs, BODY_COLS), bulk_path)
+        return commit()

@@ -21,6 +21,7 @@ from flink_elasticsearch_ingestion_spark.catalog._shared import (
     lastwins,
     _minhash_pairs_cte,
 )
+from flink_elasticsearch_ingestion_spark.session import context_tmpdir
 
 
 def q_copy_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,8 +88,6 @@ def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PARSED action/body fields. Hash-green against the DuckDB oracle
     on the raw events table proves the bulk wire format preserved every
     (doc_id, index_id, body) through the sink and back."""
-    import tempfile
-
     from flink_elasticsearch_ingestion_spark.functions.json_shaping import encode_body
     from flink_elasticsearch_ingestion_spark.sources.es_bulk import (
         read_bulk_payload_df,
@@ -102,7 +101,7 @@ def q_es_bulk_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = encode_body(C.shape_documents(events), C.BODY_COLS).select(
         "doc_id", "index_id", "source"
     )
-    out = tempfile.mkdtemp(prefix="es_bulk_roundtrip_")
+    out = context_tmpdir("es_bulk_roundtrip_")
     write_bulk(docs, out, overwrite=True)
     back = read_bulk_payload_df(spark, out)
     return (
@@ -212,8 +211,6 @@ def q_es_scroll_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-green against the DuckDB oracle on the raw events table proves
     the shard staging + scroll read + pushdown preserved every
     (doc_id, index_id, ts, source)."""
-    import tempfile
-
     from flink_elasticsearch_ingestion_spark.functions.json_shaping import encode_body
     from flink_elasticsearch_ingestion_spark.sources.es_scroll import (
         scroll_read,
@@ -224,7 +221,7 @@ def q_es_scroll_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = encode_body(C.shape_documents(events), C.BODY_COLS).select(
         "doc_id", "index_id", "ts", "source"
     )
-    idx = tempfile.mkdtemp(prefix="es_scroll_roundtrip_")
+    idx = context_tmpdir("es_scroll_roundtrip_")
     write_index_shards(docs, idx, n_shards=8)
     # scroll_read is session-conf-safe: it enables the pushdown conf
     # when runtime-settable (the vanilla driver session included) and
@@ -328,8 +325,6 @@ def q_es_search_after_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     order's next 200. doc_id compares as a string (ES _id semantics);
     the oracle replays the cursor, the lexicographic order, and the
     page boundary on the raw events table."""
-    import tempfile
-
     from flink_elasticsearch_ingestion_spark.functions.json_shaping import encode_body
     from flink_elasticsearch_ingestion_spark.sources.es_scroll import (
         search_after_read,
@@ -340,7 +335,7 @@ def q_es_search_after_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = encode_body(C.shape_documents(events), C.BODY_COLS).select(
         "doc_id", "index_id", "ts", "source"
     )
-    idx = tempfile.mkdtemp(prefix="es_search_after_")
+    idx = context_tmpdir("es_search_after_")
     write_index_shards(docs, idx, n_shards=8)
     page = search_after_read(
         spark, idx, page_size=200, after=(CHECKPOINT, "0")
@@ -362,8 +357,6 @@ def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans. Proves the commit protocol serves exact historical
     snapshots: the oracle derives both versions straight from the raw
     table and replays the same classification."""
-    import tempfile
-
     from flink_elasticsearch_ingestion_spark.operators.copy import cdc_classify
     from flink_elasticsearch_ingestion_spark.sources.versioned import (
         VersionedTable,
@@ -372,7 +365,7 @@ def q_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="time_travel_"))
+    t = VersionedTable(spark, context_tmpdir("time_travel_"))
     t.commit(orders.filter(F.col("o_orderkey") % 3 != 0))
     t.commit(orders.filter(F.col("o_orderkey") % 3 == 0))
     v2 = orders.filter(F.col("o_orderkey") % 7 != 0).select(

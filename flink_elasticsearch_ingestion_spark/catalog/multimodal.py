@@ -18,6 +18,7 @@ from flink_elasticsearch_ingestion_spark.catalog._shared import (
     _nrows,
     _plane_values,
 )
+from flink_elasticsearch_ingestion_spark.session import context_tmpdir
 
 
 def q_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,15 +67,13 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     every payload byte — the entry point a real image/audio corpus
     arrives through before any multimodal operator runs."""
     import os
-    import tempfile
-
     docs = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
         .select("doc_id", "text")
         .collect()
     )  # bounded staging slice (sf0.01: 50 files) — fixture setup, not the operator
-    d = tempfile.mkdtemp(prefix="binary_ingest_")
+    d = context_tmpdir("binary_ingest_")
     for r in docs:
         with open(os.path.join(d, f"{r['doc_id']}.bin"), "wb") as fh:
             fh.write(r["text"].encode("utf-8"))

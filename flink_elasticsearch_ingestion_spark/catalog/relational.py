@@ -17,6 +17,7 @@ from flink_elasticsearch_ingestion_spark.catalog._shared import (
     _t,
     _hilbert_sql,
 )
+from flink_elasticsearch_ingestion_spark.session import context_tmpdir
 
 
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,13 +575,11 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated fact-fact joins at 100 TB. Values are layout-independent
     (the oracle joins the raw tables); the exchange-free plan is pinned
     by tests/test_plans.py::test_bucketed_join_is_colocated."""
-    import tempfile
-
     from flink_elasticsearch_ingestion_spark.sources.layout import (
         colocated_order_revenue,
     )
 
-    staging = tempfile.mkdtemp(prefix="bucketed_join_")
+    staging = context_tmpdir("bucketed_join_")
     return colocated_order_revenue(
         spark, _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders"), staging
     )

@@ -79,6 +79,18 @@ def get_spark(
     return spark
 
 
+def context_tmpdir(prefix: str) -> str:
+    """A fresh directory under the active SparkContext's SparkFiles
+    root, which Spark deletes when the context stops. Staging for the
+    frames catalog queries return: they stay recomputable for the life
+    of the context, and nothing is left behind in the system temp dir."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers
     regardless of the driver process's cwd / PYTHONPATH.
@@ -98,14 +110,11 @@ def ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_fei_pkg_shipped", False):
         return
-    import tempfile
     import zipfile
 
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_root)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"fei_spark_pkg_{os.getpid()}.zip"
-    )
+    zpath = os.path.join(context_tmpdir("fei_pkg_"), "fei_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for dirpath, _dirs, files in os.walk(pkg_root):
             for f in files:

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_elasticsearch_ingestion_spark.sources.tables import read_parquet
+
 
 def _as_event_time(df: DataFrame, col: str) -> DataFrame:
     """Watermarks require TIMESTAMP; tz-less parquet reads as
@@ -77,7 +79,7 @@ def stream_windowed_counts(
     """readStream -> watermarked tumbling windows -> in-memory sink
     (update mode: every trigger emits changed windows; the final table
     holds the latest value per window)."""
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     counts = windowed_event_counts(stream, window=window, watermark=watermark)
     return (
@@ -143,7 +145,7 @@ def stream_dedup_copy(
     query_name: str = "dedup_stream",
 ):
     """readStream -> watermarked exact dedup -> append to memory sink."""
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     deduped = streaming_dedup(stream)
     return (
@@ -228,7 +230,7 @@ def stream_user_stats(
     query_name: str = "user_stats",
 ):
     """readStream -> stateful per-user profile -> in-memory sink."""
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     stats = stateful_user_stats(stream)
     return (
@@ -291,7 +293,7 @@ def stream_sliding_counts(
     """readStream -> watermarked sliding windows -> memory sink (update
     mode). The hop fan-out happens map-side before the keyed shuffle;
     watermark eviction bounds state to the active window set."""
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     counts = (
         _as_event_time(stream, "ts")
@@ -344,7 +346,7 @@ def stream_incremental_rollup(
     )
 
     keys = keys or ["event_type"]
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(
@@ -413,7 +415,7 @@ def stream_incremental_dedup(
         near_duplicates_incremental,
     )
 
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
 
     def _store_batches(path: str) -> list[str]:
         if not os.path.isdir(path):
@@ -497,7 +499,7 @@ def stream_enriched_counts(
 ):
     """readStream -> stream-static enrich -> per-segment counts ->
     memory sink (complete mode keeps the small per-segment table)."""
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     counts = (
         enrich_stream(stream, users)
@@ -533,7 +535,7 @@ def stream_session_counts(
     the (small, per-user) session table correct under merges, and the
     final table equals the batch computation once the stream drains
     (asserted by the parity test)."""
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     counts = (
         _as_event_time(stream, "ts")
@@ -649,7 +651,7 @@ def stream_constraint_report(
         constraint_report,
     )
 
-    schema = spark.read.parquet(source_path).schema
+    schema = read_parquet(spark, source_path).schema
     stream = spark.readStream.schema(schema).parquet(source_path)
     report = constraint_report(stream, rules)
     return (
@@ -694,7 +696,7 @@ def stream_merge_apply(
 
     from flink_elasticsearch_ingestion_spark.operators.copy import merge_apply
 
-    schema = spark.read.parquet(changes_path).schema
+    schema = read_parquet(spark, changes_path).schema
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if os.path.isdir(snapshot_path):
@@ -806,7 +808,7 @@ def stream_heavy_hitters(
     sketch, with state in the summary parquet (never the stream state
     store), like the incremental-dedup signature store and the CDC
     snapshot."""
-    schema = spark.read.parquet(docs_path).schema
+    schema = read_parquet(spark, docs_path).schema
     apply_batch = heavy_hitters_apply_factory(
         spark, summary_path, m=m, n_parts=n_parts
     )
@@ -906,7 +908,7 @@ def stream_kmv(
     folds into the per-group k-minimum-values sketch table, keeping
     distinct / Jaccard / intersection estimates continuously fresh
     with bounded state (see ``kmv_apply_factory``)."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     apply_batch = kmv_apply_factory(
         spark, sketch_path, key_col=key_col, group_col=group_col, k=k
     )
@@ -1015,7 +1017,7 @@ def stream_drift(
     histogram and appends a PSI-vs-reference snapshot (see
     ``drift_apply_factory``) — the continuously-evaluated twin of the
     batch ``distribution_drift_psi`` / ``ks_drift`` monitors."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     apply_batch = drift_apply_factory(
         spark,
         ref_hist,
@@ -1109,7 +1111,7 @@ def stream_anomaly(
 ):
     """Streaming anomaly monitor: every micro-batch appends its total
     + trailing z-score verdict (see ``anomaly_apply_factory``)."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     apply_batch = anomaly_apply_factory(
         spark,
         monitor_path,
@@ -1198,7 +1200,7 @@ def stream_cusum(
     """Streaming two-sided CUSUM monitor: every micro-batch folds its
     total into the persistent control-chart state (see
     ``cusum_apply_factory``)."""
-    schema = spark.read.parquet(events_path).schema
+    schema = read_parquet(spark, events_path).schema
     apply_batch = cusum_apply_factory(
         spark,
         monitor_path,

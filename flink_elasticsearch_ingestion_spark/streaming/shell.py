@@ -21,11 +21,13 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_elasticsearch_ingestion_spark.operators.copy import incremental_copy, shape_documents
 from flink_elasticsearch_ingestion_spark.sources.sinks import DocumentSink
+from flink_elasticsearch_ingestion_spark.sources.tables import read_parquet
 
 
 class CheckpointStore:
@@ -64,43 +66,63 @@ class CheckpointStore:
             json.dump(state, f)
 
 
+def checkpointed_copy(
+    events: DataFrame, store: CheckpointStore
+) -> tuple[DataFrame, Callable[[], int]]:
+    """The copy (``incremental_copy``) of the ``events`` past ``store``'s
+    offset, and a ``commit()`` to call once that frame's one write has
+    returned: it saves the new offset and returns the rows written.
+
+    Prefers the exact ns offset whenever the source carries ``ts_ns``
+    (see CheckpointStore); falls back to the us-grain timestamp offset
+    for sources without it. The row count, ``max(ts)`` and
+    ``max(ts_ns)`` are ``Observation``s riding in the write's own job,
+    so a poll is one Spark pass; a failed write raises before
+    ``commit()`` runs, and a poll with nothing new leaves the offset
+    alone."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    has_ns = "ts_ns" in events.columns
+    ck_ns = store.load_ns() if has_ns else None
+    if has_ns:
+        # observed below the ts filters: max over the full slice
+        # equals max over the rows that pass whenever any row does
+        if ck_ns is not None:
+            events = events.filter(F.col("ts_ns") > F.lit(ck_ns))
+        ns_obs = Observation()
+        events = events.observe(ns_obs, F.max("ts_ns").alias("max_ns"))
+    if ck_ns is not None:
+        docs = incremental_copy(events, checkpoint_ns=ck_ns)
+    else:
+        docs = incremental_copy(events, checkpoint_ts=store.load())
+    obs = Observation()
+    docs = docs.observe(obs, F.count(F.lit(1)).alias("n"), F.max("ts").alias("max_ts"))
+
+    def commit() -> int:
+        n = obs.get["n"]
+        if n:
+            store.save(
+                obs.get["max_ts"].isoformat(sep=" "),
+                checkpoint_ns=ns_obs.get["max_ns"] if has_ns else None,
+            )
+        return n
+
+    return docs, commit
+
+
 def run_incremental_batch(
     events: DataFrame,
     sink: DocumentSink,
     store: CheckpointStore,
 ) -> int:
-    """One poll of the batch-mode incremental copy: filter past the saved
-    offset, copy, advance the offset. Returns rows written.
-
-    Prefers the exact ns offset whenever the source carries ``ts_ns``
-    (see CheckpointStore); falls back to the us-grain timestamp offset
-    for sources without it."""
-    from pyspark.sql import functions as F
-
-    has_ns = "ts_ns" in events.columns
-    ck_ns = store.load_ns() if has_ns else None
-    if ck_ns is not None:
-        docs = incremental_copy(events, checkpoint_ns=ck_ns)
-    else:
-        docs = incremental_copy(events, checkpoint_ts=store.load())
-    docs = docs.cache()
-    try:
-        n = docs.count()
-        if n:
-            sink.write(docs)
-            max_ts = docs.agg({"ts": "max"}).first()[0]
-            max_ns = None
-            if has_ns:
-                # max over the already-filtered source slice; the filter
-                # is pushed to the scan so this agg reads only new rows
-                src = events
-                if ck_ns is not None:
-                    src = src.filter(F.col("ts_ns") > F.lit(ck_ns))
-                max_ns = src.agg(F.max("ts_ns")).first()[0]
-            store.save(max_ts.isoformat(sep=" "), checkpoint_ns=max_ns)
-        return n
-    finally:
-        docs.unpersist()
+    """One poll of the batch-mode incremental copy in one Spark pass:
+    filter past the saved offset, copy, write, advance the offset
+    (``checkpointed_copy``). Returns rows written. ``sink.write`` must
+    run one action over the frame it is given."""
+    docs, commit = checkpointed_copy(events, store)
+    sink.write(docs)
+    return commit()
 
 
 def stream_copy(
@@ -125,11 +147,9 @@ def stream_copy(
     scroll page size, mapped to ``maxFilesPerTrigger`` — honored by
     AvailableNow too, which then drains in multiple rate-limited
     micro-batches instead of one."""
-    reader = spark.readStream.format("parquet")
-    if schema:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.schema(spark.read.parquet(source_path).schema)
+    reader = spark.readStream.format("parquet").schema(
+        schema or read_parquet(spark, source_path).schema
+    )
     if batch_size_files is not None:
         reader = reader.option("maxFilesPerTrigger", str(batch_size_files))
     stream = reader.load(source_path)

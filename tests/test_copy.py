@@ -147,3 +147,24 @@ def test_compact_last_wins_converges_append_sink(tmp_path, spark, sf_dir):
     assert converged.count() == docs.count()
     cols = docs.columns
     assert converged.select(*cols).exceptAll(docs).count() == 0
+
+
+def test_copy_run_is_one_pass(tmp_path, spark, sf_dir, count_jobs):
+    """``Engine.copy_run`` writes in one pass: the row count and the
+    checkpoint's max(ts) ride in the sink's write job (no cache, no
+    count job, no max-ts job), and the registered events schema is
+    reused. An empty poll still runs only the write."""
+    from flink_elasticsearch_ingestion_spark.api import Engine
+
+    eng = Engine(sf_dir, spark=spark)
+    sc = spark.sparkContext
+    cached_before = set(sc._jsc.getPersistentRDDs().keySet())
+    ck, out = str(tmp_path / "ck.json"), str(tmp_path / "copied")
+    n, jobs = count_jobs(lambda: eng.copy_run(ck, out))
+    assert n == load_events(spark, sf_dir).count()
+    assert jobs <= 2
+    saved = CheckpointStore(ck).load()
+    n, jobs = count_jobs(lambda: eng.copy_run(ck, out))
+    assert n == 0 and jobs <= 2
+    assert CheckpointStore(ck).load() == saved
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before

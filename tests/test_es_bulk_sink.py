@@ -187,20 +187,21 @@ def test_engine_copy_run_bulk_incremental_resume(tmp_path, spark, sf_dir):
     assert len(read_bulk_payload(out)) == n1
 
 
-def test_copy_run_bulk_is_one_pass(tmp_path, spark, sf_dir):
+def test_copy_run_bulk_is_one_pass(tmp_path, spark, sf_dir, count_jobs):
     """A copy poll is scan -> last-wins -> bulk write in one pass: the
     checkpoint's max(ts) rides in the write's job (no count, no
-    max-ts job, no persist)."""
+    max-ts job, no persist), and the events schema registered by
+    ``Engine(...)`` is reused (no inference job)."""
     from flink_elasticsearch_ingestion_spark.api import Engine
 
     eng = Engine(sf_dir, spark=spark)
     sc = spark.sparkContext
-    status = sc._jsc.sc().statusStore()
-    jobs_before = status.jobsList(None).size()
     cached_before = set(sc._jsc.getPersistentRDDs().keySet())
-    n = eng.copy_run_bulk(str(tmp_path / "ck.json"), str(tmp_path / "bulk"))
+    n, jobs = count_jobs(
+        lambda: eng.copy_run_bulk(str(tmp_path / "ck.json"), str(tmp_path / "bulk"))
+    )
     assert n > 0
-    assert status.jobsList(None).size() - jobs_before <= 3
+    assert jobs <= 2
     assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before
 
 
