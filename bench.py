@@ -345,7 +345,7 @@ def _cpu_scaling_probe(spark, sf_dir: str):
     Timed like every other entry (min of 2 back-to-back runs) and
     reported inside `queries` as "cpu_scaling_probe", but EXCLUDED
     from `value` so the headline total stays comparable
-    round-over-round (addition-only harness change, OPTIMIZATION_r12).
+    round-over-round (addition-only harness change; see CHANGES.md).
     """
     from pyspark.sql import functions as F
 
@@ -553,19 +553,6 @@ def main() -> None:
             " needles (sf0.1 probe = 1000) — ~+0.3s automaton build at"
             " toy scale buys needle-count-free linear scans; measured"
             " 2.8-3.4x faster from 2k needles / 50k docs up (SCALE.md)"
-        ),
-        "mutual_matches": (
-            "r11-opt: the scored candidate frame is persisted with an"
-            " eager fill (OPTIMIZATION_r11.md) — one extra job at sf0.1"
-            " buys removing the 2x re-evaluation of the Python scoring"
-            " stage; interleaved sf1 A/B measured 6.8s -> 3.5-5.1s"
-        ),
-        "margin_matches": (
-            "r11-opt: same scored-frame persist as mutual_matches (3"
-            " consumers there) — sf1 A/B 9.2-12.1s -> 3.9-5.3s"
-        ),
-        "centered_mutual_matches": (
-            "r11-opt: inherits mutual_matches' scored-frame persist"
         ),
         "saturating_dedup_rate": (
             "r10: the batch-axis running sums went two-phase (coarse"

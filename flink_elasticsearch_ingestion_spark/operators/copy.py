@@ -250,38 +250,6 @@ def cdc_classify(
     )
 
 
-def observed_copy(
-    events: DataFrame,
-    checkpoint_ts: dt.datetime | str | None = None,
-) -> tuple[DataFrame, "object"]:
-    """Incremental copy instrumented with ``df.observe`` metrics — the
-    Spark-native analog of the Flink job counters an operator would
-    watch on the reference (records in/out, watermark position).
-
-    ``observe`` attaches aggregate metrics to the flowing DataFrame:
-    they are computed DURING whatever action the sink runs — zero extra
-    passes, zero extra shuffles, unlike a separate ``count()`` which
-    would rescan the source. Returns ``(df, observation)``; read
-    ``observation.get`` AFTER an action for
-    ``{n_docs, n_distinct_docs, max_ts}`` (exact, computed on the rows
-    actually written).
-
-    At 100 TB this is the difference between free per-run telemetry
-    and doubling the job: every audit number rides the write pass.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation("copy_metrics")
-    docs = incremental_copy(events, checkpoint_ts=checkpoint_ts)
-    observed = docs.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.approx_count_distinct("doc_id").alias("n_distinct_docs"),
-        F.max("ts").alias("max_ts"),
-    )
-    return observed, obs
-
-
 def merge_apply(
     snapshot: DataFrame,
     changes: DataFrame,

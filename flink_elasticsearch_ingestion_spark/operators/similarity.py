@@ -513,7 +513,6 @@ def knn_join_lsh(
     vec_col: str = "embedding",
     corpus_rows: "int | None" = None,
     arrow: bool = False,
-    arrow_score: "bool | None" = None,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -552,7 +551,6 @@ def knn_join_lsh(
         corpus_id=corpus_id,
         vec_col=vec_col,
         arrow=arrow,
-        arrow_score=arrow_score,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
@@ -617,7 +615,10 @@ def _arrow_banded(
             X = np.vstack(pdf["__vec"].to_numpy())  # n x dim
             if bucket_shift is not None:
                 X = X - float(bucket_shift)
-            signs = (X @ P) >= 0  # n x (tables*bits)
+            # n x (tables*bits); not `>= 0`: Spark orders NaN above
+            # every number, so the SQL form's `dot >= 0` is true for a
+            # NaN dot, where numpy's is false
+            signs = ~((X @ P) < 0)
             bks = signs.reshape(len(pdf), tables, bits) @ weights
             yield pd.DataFrame(
                 {
@@ -637,136 +638,16 @@ def _arrow_banded(
     )
 
 
-def cosine_unrolled(a: F.Column, b: F.Column, dim: int) -> F.Column:
-    """``cosine(a, b)`` as a FLAT unrolled expression over a known
-    ``dim`` — the whole-stage-codegen twin of the interpreted
-    ``aggregate``/``zip_with`` fold (higher-order-function lambdas are
-    CodegenFallback in Spark, costing an interpreted eval per element;
-    at 64 dims x 3 folds that is ~200 interpreted ops per candidate
-    pair).  The sums are built as LEFT-DEEP ``(((t1)+t2)+t3)...``
-    chains, so the IEEE addition order — and therefore every result
-    bit — is identical to the fold's ``acc + x_i*y_i``.
-
-    ``try_element_at`` (1-based) yields NULL past a short array, which
-    nulls the whole sum exactly like ``zip_with``'s null-padding; the
-    caller guards length > ``dim`` (a longer vector would fold over
-    all its elements while this form stops at ``dim``)."""
-    def at(col: F.Column, j: int) -> F.Column:
-        return F.try_element_at(col, F.lit(j)).cast("double")
-
-    dot_c = F.lit(0.0)
-    na = F.lit(0.0)
-    nb = F.lit(0.0)
-    for j in range(1, dim + 1):
-        dot_c = dot_c + at(a, j) * at(b, j)
-        na = na + at(a, j) * at(a, j)
-        nb = nb + at(b, j) * at(b, j)
-    return dot_c / (F.sqrt(na) * F.sqrt(nb))
-
-
-def _arrow_pair_cosines(pairs: DataFrame) -> DataFrame:
-    """Exact-cosine scoring of a (query_id, neighbor_id, q_vec, c_vec)
-    candidate frame via per-batch numpy — the Arrow twin of the
-    ``cosine()`` HOF expression (VERDICT r10 "Next round #3": the
-    bitext scoring stage was the fattest remaining per-pair constant,
-    mutual/margin 156/151 s at sf30).
-
-    BIT-PARITY by construction, not by accident: the accumulators
-    replay the SQL left fold's exact FP op sequence — ``acc + x_i*y_i``
-    in index order, in float64 — as a column-wise loop (``acc +=
-    Q[:, j] * C[:, j]``), never numpy's pairwise-summed ``dot``/
-    ``einsum``, so every pair's double is bit-identical to the
-    expression form (IEEE ops in the same order are deterministic).
-    Rounding stays a Spark-side ``F.round`` on the returned raw double,
-    so HALF_UP semantics are literally the same code path.
-
-    Degenerate-input parity with the expression form under ANSI:
-
-    - null vector or length-mismatched pair -> NULL cosine (zip_with
-      null-padding nulls the fold); here: never computed, and the
-      NaN-in-float64 Arrow conversion yields SQL NULL.
-    - NaN vector elements -> NaN cosine (a VALUE, not null): flagged
-      per row (``nan_flag``) because the Arrow float64 conversion
-      would otherwise fold real NaN into NULL; the caller re-issues
-      ``lit(NaN)`` for flagged rows.
-    - zero-norm vector -> raises, mirroring ANSI DIVIDE_BY_ZERO from
-      the expression path (silently guessing Inf/NaN would diverge).
-
-    Both vectors ride the candidate frame into ONE mapInPandas pass —
-    no extra shuffle versus the expression select it replaces.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qt = pairs.schema["query_id"].dataType.simpleString()
-    nt = pairs.schema["neighbor_id"].dataType.simpleString()
-
-    def score(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            qv, cv = pdf["q_vec"], pdf["c_vec"]
-            lq = np.array([-1 if v is None else len(v) for v in qv])
-            lc = np.array([-1 if v is None else len(v) for v in cv])
-            raw = np.full(n, np.nan)
-            computed = np.zeros(n, dtype=bool)
-            valid = (lq == lc) & (lq >= 0)
-            for L in np.unique(lq[valid]):
-                m = valid & (lq == L)
-                rows = int(m.sum())
-                if L == 0:
-                    raise ArithmeticError(
-                        "[DIVIDE_BY_ZERO] zero-length vector in cosine "
-                        "(ANSI parity with the expression path)"
-                    )
-                Q = np.vstack(qv[m].to_numpy()).astype("float64")
-                C = np.vstack(cv[m].to_numpy()).astype("float64")
-                acc = np.zeros(rows)
-                nq = np.zeros(rows)
-                nc = np.zeros(rows)
-                for j in range(int(L)):  # the SQL fold, column-wise
-                    acc += Q[:, j] * C[:, j]
-                    nq += Q[:, j] * Q[:, j]
-                    nc += C[:, j] * C[:, j]
-                den = np.sqrt(nq) * np.sqrt(nc)
-                if np.any(den == 0.0):
-                    raise ArithmeticError(
-                        "[DIVIDE_BY_ZERO] zero-norm vector in cosine "
-                        "(ANSI parity with the expression path)"
-                    )
-                raw[m] = acc / den
-                computed[m] = True
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    # NaN -> SQL NULL in the Arrow conversion: exactly
-                    # right for never-computed rows; true NaNs restored
-                    # from the flag by the caller
-                    "cosine_raw": raw,
-                    "nan_flag": computed & np.isnan(raw),
-                }
-            )
-
-    return pairs.mapInPandas(
-        score,
-        schema=(
-            f"query_id {qt}, neighbor_id {nt}, "
-            "cosine_raw double, nan_flag boolean"
-        ),
-    )
-
-
 def _bucket_matmul_scores(
     ql: DataFrame, cl: DataFrame, *, dim: int, block: int = 2048
 ) -> DataFrame:
     """Bucket-LOCAL pairwise cosine scoring (the sixth-decade shape):
     ``ql``/``cl`` carry (id, table_idx, bucket, vec); each (table_idx,
-    bucket) cogroup scores its query x corpus members with the same
-    column-loop float64 accumulation as :func:`_arrow_pair_cosines`
-    (k-order adds -> bit-identical to the SQL fold), emitting thin
-    (query_id, neighbor_id, cosine_raw, nan_flag) rows.
+    bucket) cogroup scores its query x corpus members with a float64
+    column loop that replays the SQL fold's ``acc + x_k*y_k`` in
+    k-order (never numpy's pairwise-summed ``dot``), so every cosine
+    is bit-identical to :func:`cosine`, emitting thin (query_id,
+    neighbor_id, cosine_raw, nan_flag) rows.
 
     Why this exists (measured, r11): the pair-attach shape — join both
     64-dim vectors onto every candidate pair, then score — shuffles
@@ -783,8 +664,11 @@ def _bucket_matmul_scores(
     Groups are occupancy-bounded by auto-bits (~32 target / table);
     query rows are additionally blocked at ``block`` so a pathological
     bucket bounds worker memory at ``block x |bucket|`` doubles.
-    Same degenerate-input contract as ``_arrow_pair_cosines``
-    (upstream banding already dropped null/wrong-dim vectors)."""
+    Degenerate inputs match the fold under ANSI: upstream banding
+    already dropped null/wrong-dim vectors; a NaN element gives a NaN
+    cosine (a value, flagged in ``nan_flag`` because the Arrow float64
+    conversion would fold it into NULL); a zero-norm vector raises
+    DIVIDE_BY_ZERO."""
     import numpy as np
     import pandas as pd
 
@@ -856,44 +740,29 @@ def _lsh_scored_pairs(
     corpus_id: str,
     vec_col: str,
     arrow: bool = False,
-    arrow_score: "bool | None" = None,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
-    """Shared candidate stage of ``knn_join_lsh`` / ``mutual_best_match``:
-    multi-table sign-LSH bucket collisions between two vector frames,
-    ids-only dedup, then ONE exact-cosine verify per distinct pair.
+    """Shared candidate stage of ``knn_join_lsh``, ``mutual_best_match``
+    and ``margin_best_match``: multi-table sign-LSH bucket collisions
+    between two vector frames, then ONE exact cosine per distinct pair.
     Returns (query_id, neighbor_id, cosine) with cosine rounded to 6dp
     (rank ties downstream break on the rounded value + id, identically
     to the DuckDB oracle).
 
-    ``arrow=True`` computes the bucket triples with a per-batch BLAS
-    matmul (:func:`_arrow_banded`) instead of the interpreted HOF
-    expression — the bucket build is the CPU-heavy map stage and its
-    per-vector cost is tables x bits plane dots, which under
-    ``bits="auto"`` grows with log(corpus); the matmul makes that term
-    cheap (measured on mutual_matches at sf3: 23.6s -> see SCALE.md).
-    Bucket parity between the two forms is unit-pinned.
+    One scorer per ``arrow`` value, bit-identical to each other
+    (unit-pinned, same oracle hashes):
 
-    ``arrow_score`` swaps the per-pair exact-cosine SCORING stage —
-    the other per-candidate constant the sf30 ladder surfaced on
-    mutual/margin (VERDICT r10 #3).  All modes are fold-order
-    BIT-parity pinned (identical hashes); they differ only in plan
-    shape, all measured r11 (SCALE.md):
-
-    - ``None`` (default): ``"bucket"`` when ``arrow=True``, else the
-      fold.
-    - ``"bucket"`` (:func:`_bucket_matmul_scores`): bucket-LOCAL
-      numpy scoring — vectors ship once per band membership, never on
-      the pair grain; the shape that survived the sixth decade (the
-      pair-attach form's ~130 GB spill at sf100 filled the disk) and
-      measured fastest at sf10/sf30 too.
-    - ``True`` (:func:`_arrow_pair_cosines`): one mapInPandas over
-      the vector-attached candidate-pair frame.
-    - ``"unrolled"`` (:func:`cosine_unrolled`): flat codegen chain;
-      wins small, trips JIT method limits at scale.
-    - ``False``: the interpreted ``aggregate``/``zip_with`` fold (the
-      oracle's literal twin).
+    - ``arrow=False``: ids-only bucket join and dedup, then both
+      vectors re-attach to each distinct pair and the interpreted
+      ``aggregate``/``zip_with`` fold scores it (the oracle's literal
+      twin).
+    - ``arrow=True``: the bucket triples come from a per-batch BLAS
+      matmul (:func:`_arrow_banded`) and each (table, bucket) scores
+      its own members (:func:`_bucket_matmul_scores`), so vectors ship
+      once per band membership and never on the pair grain — the
+      pair-attach shape's ~130 GB spill at sf100 filled the disk
+      (SCALE.md, round 11 part 2).
 
     ``bucket_shift`` / ``center_check``: the same off-center guard as
     ``embedding_near_duplicates`` — sign-LSH on all-positive features
@@ -965,31 +834,10 @@ def _lsh_scored_pairs(
 
     bq = banded(queries, query_id, "query_id")
     bc = banded(corpus, corpus_id, "neighbor_id")
-    cand_ids = (
-        bq.join(
-            bc,
-            (bq["table_idx"] == bc["table_idx"]) & (bq["bucket"] == bc["bucket"]),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    # vectors re-attach AFTER the ids-only dedup: one narrow keyed join
-    # per side (AQE broadcasts the vector tables when they fit; at
-    # corpus scale they shuffle as narrow (id, vec) pairs exactly once)
-    q_vecs = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    c_vecs = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    mode = ("bucket" if arrow else False) if arrow_score is None else arrow_score
-    if mode == "bucket":
-        # sixth-decade shape: vectors ride the banded frame ONCE per
-        # band membership; scoring is bucket-local (no pair-grain
-        # vector shuffle), dedup happens on thin scored rows.  bq/bc
-        # are ids-only — re-attach the vector per (id, table, bucket)
-        # row with one narrow keyed join per side.
+    if arrow:
+        # bq/bc are ids-only: re-attach the vector per (id, table,
+        # bucket) row with one narrow keyed join per side; dedup happens
+        # on the thin scored rows
         ql = bq.join(
             queries.select(
                 F.col(query_id).alias("query_id"),
@@ -1014,36 +862,65 @@ def _lsh_scored_pairs(
                 6,
             ).alias("cosine"),
         )
+    cand_ids = (
+        bq.join(
+            bc,
+            (bq["table_idx"] == bc["table_idx"]) & (bq["bucket"] == bc["bucket"]),
+        )
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    # vectors re-attach AFTER the ids-only dedup: one narrow keyed join
+    # per side (AQE broadcasts the vector tables when they fit; at
+    # corpus scale they shuffle as narrow (id, vec) pairs exactly once)
+    q_vecs = queries.select(
+        F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+    c_vecs = corpus.select(
+        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    )
     pairs = cand_ids.join(q_vecs, "query_id").join(c_vecs, "neighbor_id")
-    if mode == "unrolled":
-        # codegen path: flat left-deep expression, zero Arrow transfer;
-        # the size guard nulls length-mismatched rows like the fold's
-        # zip_with padding (equal-length-but-wrong-dim pairs — possible
-        # only via duplicate ids with inconsistent vectors — null here
-        # where the fold would score over their full length)
-        c = F.when(
-            (F.size(F.col("q_vec")) == dim) & (F.size(F.col("c_vec")) == dim),
-            cosine_unrolled(F.col("q_vec"), F.col("c_vec"), dim),
-        )
-        return pairs.select(
-            "query_id", "neighbor_id", F.round(c, 6).alias("cosine")
-        )
-    if mode:
-        return _arrow_pair_cosines(pairs).select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.when(F.col("nan_flag"), F.lit(float("nan"))).otherwise(
-                    F.col("cosine_raw")
-                ),
-                6,
-            ).alias("cosine"),
-        )
     return pairs.select(
         "query_id",
         "neighbor_id",
         F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine"),
     )
+
+
+def _two_sided(scored: DataFrame) -> DataFrame:
+    """Each scored (query_id, neighbor_id, cosine) pair as TWO rows,
+    one per direction, so one aggregate or window over the group key
+    (side, gq, gn) serves both directions in a single pass over a
+    single evaluation of the scoring subtree (no persist, no eager job).
+
+    The ids keep their own types in typed nullable key columns: ``gq``
+    and ``pq`` have the query id's type, ``gn`` and ``pn`` the
+    neighbor's.  Side 0 is keyed by the query (``gq``; partner ``pn``;
+    ``gn``/``pq`` null), side 1 by the neighbor (``gn``; partner
+    ``pq``; ``gq``/``pn`` null).  Ordering a group by ``(pq, pn)``
+    therefore orders by the partner in its native type, and
+    ``coalesce(gq, pq)`` / ``coalesce(gn, pn)`` map any row back to its
+    pair — one plan for every pair of id types."""
+    q, n = F.col("query_id"), F.col("neighbor_id")
+    null_q = F.lit(None).cast(scored.schema["query_id"].dataType)
+    null_n = F.lit(None).cast(scored.schema["neighbor_id"].dataType)
+
+    def side(i, gq, gn, pq, pn):
+        return F.struct(
+            F.lit(i).alias("side"),
+            gq.alias("gq"),
+            gn.alias("gn"),
+            pq.alias("pq"),
+            pn.alias("pn"),
+            F.col("cosine").alias("cosine"),
+        )
+
+    return scored.select(
+        F.explode(
+            F.array(side(0, q, null_n, null_q, n), side(1, null_q, n, q, null_n))
+        ).alias("e")
+    ).select("e.*")
 
 
 def mutual_best_match(
@@ -1058,7 +935,6 @@ def mutual_best_match(
     vec_col: str = "embedding",
     corpus_rows: "int | None" = None,
     arrow: bool = False,
-    arrow_score: "bool | None" = None,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -1074,15 +950,21 @@ def mutual_best_match(
     the exact candidate set from inlined plane literals); the candidate
     join is computed — and EVALUATED — exactly once. Mutual top-1
     needs only each side's ARGMAX, not full ranks: every scored pair
-    is reshaped into two thin (side, id, partner, cosine) rows, ONE
+    is reshaped into two thin rows (:func:`_two_sided`), ONE
     ``min(struct(-cosine, partner))`` partial+final hash aggregate
     keyed by (side, id) produces both directions' argmaxes in a single
     pass (map-side combine, no sort, no cache), and a second tiny
     aggregate on the canonical pair keeps the pairs chosen from BOTH
     sides — exactly best_l ⋈ best_r, without persisting the scored
     frame or evaluating the scoring stage twice. Ties break on (cosine
-    DESC at 6dp, partner id ASC), identically to the old rank form and
-    to the SQL oracle.
+    DESC at 6dp, partner id ASC in its own type), identically to the
+    SQL oracle.
+
+    The left and right ids may have different types (int vs bigint,
+    string vs bigint): the plan is the same, ``vec_a`` keeps the left
+    id's type and ``vec_b`` the right's, and the result is a lazy
+    frame with no cached or checkpointed blocks. The scorer is the
+    one ``arrow`` selects (see :func:`_lsh_scored_pairs`).
 
     ``corpus_rows`` contract for ``bits="auto"``: pass the row count
     of the FULL vector universe the planes must discriminate (e.g. the
@@ -1112,126 +994,33 @@ def mutual_best_match(
         corpus_id=right_id,
         vec_col=vec_col,
         arrow=arrow,
-        arrow_score=arrow_score,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
-    # r12 optimization round (guide §2.4 — remove the shuffle-and-cache
-    # entirely, not just share it): r11 persisted the scored frame
-    # because BOTH argmax directions consumed it.  That persist leaked
-    # for the session lifetime (VERDICT r11 #5) and its eager fill ran
-    # the whole scoring job at plan-build time (ADVICE r11).  Instead,
-    # reshape each scored pair into TWO thin (side, gid, partner,
-    # cosine) rows — side 0 keyed by the query, side 1 by the neighbor
-    # — so ONE hash aggregate computes both directions' argmaxes in a
-    # single pass over a single evaluation of the candidate+scoring
-    # subtree.  Each argmax row then maps back to its canonical
-    # (query, neighbor) pair; a pair chosen by BOTH sides (count == 2)
-    # is exactly best_l ⋈ best_r.  No persist, no fill job, no leak,
-    # and the expensive Python scoring stage appears ONCE in the plan.
-    #
-    # argmax per direction: min over ((-cosine), partner) = max cosine,
-    # smallest partner id on ties — struct comparison is lexicographic,
-    # and works for any orderable partner id type.  The single-pass
-    # reshape needs the two id columns to share one Spark type (they
-    # ride the same exploded struct field); mismatched-type corpora
-    # take the legacy two-aggregate arm below, which now bounds its
-    # cache lifetime to the call.
-    if dict(scored.dtypes)["query_id"] == dict(scored.dtypes)["neighbor_id"]:
-        sides = scored.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("side"),
-                        F.col("query_id").alias("gid"),
-                        F.col("neighbor_id").alias("partner"),
-                        F.col("cosine").alias("cosine"),
-                    ),
-                    F.struct(
-                        F.lit(1).alias("side"),
-                        F.col("neighbor_id").alias("gid"),
-                        F.col("query_id").alias("partner"),
-                        F.col("cosine").alias("cosine"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e.side", "e.gid", "e.partner", "e.cosine")
-        best = sides.groupBy("side", "gid").agg(
-            F.min(
-                F.struct(
-                    (-F.col("cosine")).alias("nc"),
-                    F.col("partner").alias("partner"),
-                )
-            ).alias("m")
-        )
-        chosen = best.select(
-            F.when(F.col("side") == 0, F.col("gid"))
-            .otherwise(F.col("m.partner"))
-            .alias("query_id"),
-            F.when(F.col("side") == 0, F.col("m.partner"))
-            .otherwise(F.col("gid"))
-            .alias("neighbor_id"),
-            "side",
-            (-F.col("m.nc")).alias("cosine"),
-        )
-        return (
-            chosen.groupBy("query_id", "neighbor_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_sides"),
-                F.max(F.when(F.col("side") == 0, F.col("cosine"))).alias(
-                    "cosine"
-                ),
-            )
-            .filter(F.col("n_sides") == 2)
-            .select(
-                F.col("query_id").alias("vec_a"),
-                F.col("neighbor_id").alias("vec_b"),
-                # -(-x) can materialize -0.0 where the window form kept
-                # 0.0; normalize so hashes stay identical
-                (F.col("cosine") + F.lit(0.0)).alias("cosine"),
-            )
-            .orderBy("vec_a")
-        )
-    # legacy arm (mismatched id types): two argmax aggregates over a
-    # persisted scored frame.  The result is materialized via an eager
-    # localCheckpoint so the persist can be RELEASED before returning
-    # (r11 leaked it for the session lifetime); the checkpointed blocks
-    # are result-sized and GC-managed.  The eager fill keeps the two
-    # join sides from racing a cold cache (the token_set_join lesson).
-    scored = scored.persist()
-    scored.count()
-    best_l = (
-        scored.groupBy("query_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("cosine")).alias("nc"),
-                    F.col("neighbor_id").alias("partner"),
-                )
-            ).alias("m")
-        )
-        .select(
-            "query_id",
-            F.col("m.partner").alias("neighbor_id"),
-            (-F.col("m.nc")).alias("cosine"),
-        )
+    # argmax per direction: min over (-cosine, partner) = max cosine,
+    # smallest partner id on ties (struct comparison is lexicographic;
+    # the other partner column is null throughout the group)
+    best = _two_sided(scored).groupBy("side", "gq", "gn").agg(
+        F.min(
+            F.struct((-F.col("cosine")).alias("nc"), F.col("pq"), F.col("pn"))
+        ).alias("m")
     )
-    best_r = (
-        scored.groupBy("neighbor_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("cosine")).alias("nc"),
-                    F.col("query_id").alias("partner"),
-                )
-            ).alias("m")
-        )
-        .select(
-            F.col("neighbor_id"), F.col("m.partner").alias("query_id")
-        )
+    chosen = best.select(
+        F.coalesce(F.col("gq"), F.col("m.pq")).alias("query_id"),
+        F.coalesce(F.col("gn"), F.col("m.pn")).alias("neighbor_id"),
+        "side",
+        (-F.col("m.nc")).alias("cosine"),
     )
-    out = (
-        best_l.join(best_r, ["query_id", "neighbor_id"])
+    # a pair chosen by BOTH sides (count == 2) is exactly best_l ⋈ best_r
+    return (
+        chosen.groupBy("query_id", "neighbor_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_sides"),
+            F.max(F.when(F.col("side") == 0, F.col("cosine"))).alias(
+                "cosine"
+            ),
+        )
+        .filter(F.col("n_sides") == 2)
         .select(
             F.col("query_id").alias("vec_a"),
             F.col("neighbor_id").alias("vec_b"),
@@ -1239,10 +1028,8 @@ def mutual_best_match(
             # 0.0; normalize so hashes stay identical
             (F.col("cosine") + F.lit(0.0)).alias("cosine"),
         )
-        .localCheckpoint(eager=True)
+        .orderBy("vec_a")
     )
-    scored.unpersist()
-    return out.orderBy("vec_a")
 
 
 def margin_best_match(
@@ -1259,7 +1046,6 @@ def margin_best_match(
     vec_col: str = "embedding",
     corpus_rows: "int | None" = None,
     arrow: bool = False,
-    arrow_score: "bool | None" = None,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -1278,14 +1064,16 @@ def margin_best_match(
     average"; raise toward ~1.05 for precision).
 
     Shares the single LSH-blocked candidate pass with
-    ``mutual_best_match`` (the only wide join); neighborhood averages
-    are two partitioned window aggregates over the scored frame, and
-    every margin derives from 6dp-rounded cosines with deterministic
-    (cosine DESC, id) top-k sets — so a SQL oracle replays it exactly.
+    ``mutual_best_match`` (the only wide join); both directions'
+    neighborhood averages come from ONE window pass over the
+    two-sided reshape (:func:`_two_sided`), and every margin derives
+    from 6dp-rounded cosines with deterministic (cosine DESC, id)
+    top-k sets — so a SQL oracle replays it exactly.
 
-    Scale shape: identical to mutual_best_match plus two window
-    passes over the candidate table — still sub-quadratic, still
-    bucket-bounded.
+    Scale shape: identical to mutual_best_match plus the window pass
+    and one forward rank window — still sub-quadratic, still
+    bucket-bounded. Ids of different types, the scorer and the lazy
+    result behave as in :func:`mutual_best_match`.
 
     ``corpus_rows`` contract for ``bits="auto"``: the FULL vector
     universe the planes must discriminate (see
@@ -1307,30 +1095,49 @@ def margin_best_match(
         corpus_id=right_id,
         vec_col=vec_col,
         arrow=arrow,
-        arrow_score=arrow_score,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
-    # r12 optimization round (guide §2.4): r11 persisted the scored
-    # frame because THREE consumers (both neighborhood averages + the
-    # final margin join) re-evaluated it otherwise — but the persist
-    # leaked for the session lifetime (VERDICT r11 #5) and its eager
-    # fill ran the full scoring job at plan-build time (ADVICE r11).
-    # Single-pass shape instead: reshape every scored pair into two
-    # thin (side, gid, partner, cosine) rows — side 0 keyed by the
-    # query, side 1 by the neighbor — and compute BOTH directions'
-    # neighborhood averages in ONE window pass over (side, gid):
-    # row_number gives the rank, a second same-partition window
-    # aggregate averages the top ``k_neighborhood`` cosines (no extra
-    # exchange; Spark chains the two Window ops on one sort).  Each row
-    # then maps back to its canonical (query, neighbor) pair and one
-    # pair-keyed aggregate reassembles (cosine, avg_a, avg_b) — the
-    # exact frame the old avg_l/avg_r joins produced — so the scoring
-    # subtree is evaluated ONCE with no cache at all.  avg sums run in
-    # (cosine DESC, partner) order instead of the old hash-aggregate
-    # partial order; both sum 6dp-rounded doubles and every margin is
-    # rounded at 4dp + 1e-9 (the established cross-engine guard the
-    # DuckDB oracle already exercises with ITS own sum order).
+    # Both directions' neighborhood averages in ONE window pass over
+    # (side, gq, gn): row_number gives the rank, a second same-partition
+    # window aggregate averages the top ``k_neighborhood`` cosines (Spark
+    # chains the two Window ops on one sort).  Each row then maps back
+    # to its (query, neighbor) pair and one pair-keyed aggregate
+    # reassembles (cosine, avg_a, avg_b), so the scoring subtree is
+    # evaluated ONCE with no cache.  The avg sums run in (cosine DESC,
+    # partner) order; every margin is rounded at 4dp + 1e-9 (the
+    # cross-engine guard the DuckDB oracle exercises with ITS own sum
+    # order).
+    w_rank = Window.partitionBy("side", "gq", "gn").orderBy(
+        F.col("cosine").desc(), F.col("pq"), F.col("pn")
+    )
+    w_grp = Window.partitionBy("side", "gq", "gn")
+    in_k = F.col("rn") <= k_neighborhood
+    # denominator counts top-k ROWS (not non-null cosines)
+    ranked = (
+        _two_sided(scored)
+        .withColumn("rn", F.row_number().over(w_rank))
+        .withColumn(
+            "avg_k",
+            F.sum(F.when(in_k, F.col("cosine"))).over(w_grp)
+            / F.count(F.when(in_k, F.lit(1))).over(w_grp),
+        )
+    )
+    paired = (
+        ranked.select(
+            F.coalesce(F.col("gq"), F.col("pq")).alias("query_id"),
+            F.coalesce(F.col("gn"), F.col("pn")).alias("neighbor_id"),
+            "side",
+            "cosine",
+            "avg_k",
+        )
+        .groupBy("query_id", "neighbor_id")
+        .agg(
+            F.max("cosine").alias("cosine"),
+            F.max(F.when(F.col("side") == 0, F.col("avg_k"))).alias("avg_a"),
+            F.max(F.when(F.col("side") == 1, F.col("avg_k"))).alias("avg_b"),
+        )
+    )
     margin = F.round(
         F.col("cosine") / ((F.col("avg_a") + F.col("avg_b")) / 2.0)
         + F.lit(1e-9),
@@ -1346,107 +1153,8 @@ def margin_best_match(
     wm = Window.partitionBy("query_id").orderBy(
         F.col("margin").desc(), F.col("neighbor_id")
     )
-    if dict(scored.dtypes)["query_id"] == dict(scored.dtypes)["neighbor_id"]:
-        sides = scored.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("side"),
-                        F.col("query_id").alias("gid"),
-                        F.col("neighbor_id").alias("partner"),
-                        F.col("cosine").alias("cosine"),
-                    ),
-                    F.struct(
-                        F.lit(1).alias("side"),
-                        F.col("neighbor_id").alias("gid"),
-                        F.col("query_id").alias("partner"),
-                        F.col("cosine").alias("cosine"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e.side", "e.gid", "e.partner", "e.cosine")
-        w_rank = Window.partitionBy("side", "gid").orderBy(
-            F.col("cosine").desc(), F.col("partner")
-        )
-        w_grp = Window.partitionBy("side", "gid")
-        in_k = F.col("rn") <= k_neighborhood
-        # denominator counts top-k ROWS (not non-null cosines), exactly
-        # like the old filter + count(lit(1)) aggregate
-        ranked = (
-            sides.withColumn("rn", F.row_number().over(w_rank))
-            .withColumn(
-                "avg_k",
-                F.sum(F.when(in_k, F.col("cosine"))).over(w_grp)
-                / F.count(F.when(in_k, F.lit(1))).over(w_grp),
-            )
-        )
-        paired = (
-            ranked.select(
-                F.when(F.col("side") == 0, F.col("gid"))
-                .otherwise(F.col("partner"))
-                .alias("query_id"),
-                F.when(F.col("side") == 0, F.col("partner"))
-                .otherwise(F.col("gid"))
-                .alias("neighbor_id"),
-                "side",
-                "cosine",
-                "avg_k",
-            )
-            .groupBy("query_id", "neighbor_id")
-            .agg(
-                F.max("cosine").alias("cosine"),
-                F.max(F.when(F.col("side") == 0, F.col("avg_k"))).alias(
-                    "avg_a"
-                ),
-                F.max(F.when(F.col("side") == 1, F.col("avg_k"))).alias(
-                    "avg_b"
-                ),
-            )
-        )
-        return (
-            paired.withColumn("margin", margin)
-            .withColumn("rm", F.row_number().over(wm))
-            .filter(
-                (F.col("rm") == 1) & (F.col("margin") >= margin_threshold)
-            )
-            .select(
-                F.col("query_id").alias("vec_a"),
-                F.col("neighbor_id").alias("vec_b"),
-                "cosine",
-                "margin",
-            )
-            .orderBy("vec_a")
-        )
-    # legacy arm (mismatched id types — the reshape needs one shared id
-    # type): persisted scored frame, two rank windows, two averages,
-    # final join.  Result materializes via eager localCheckpoint so the
-    # persist is RELEASED before returning (r11 leaked it); the eager
-    # fill keeps concurrent consumers off a cold cache.
-    scored = scored.persist()
-    scored.count()
-    wl = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    wr = Window.partitionBy("neighbor_id").orderBy(
-        F.col("cosine").desc(), F.col("query_id")
-    )
-    ranked = scored.withColumn("rl", F.row_number().over(wl)).withColumn(
-        "rr", F.row_number().over(wr)
-    )
-    avg_l = (
-        ranked.filter(F.col("rl") <= k_neighborhood)
-        .groupBy("query_id")
-        .agg((F.sum("cosine") / F.count(F.lit(1))).alias("avg_a"))
-    )
-    avg_r = (
-        ranked.filter(F.col("rr") <= k_neighborhood)
-        .groupBy("neighbor_id")
-        .agg((F.sum("cosine") / F.count(F.lit(1))).alias("avg_b"))
-    )
-    out = (
-        scored.join(avg_l, "query_id")
-        .join(avg_r, "neighbor_id")
-        .withColumn("margin", margin)
+    return (
+        paired.withColumn("margin", margin)
         .withColumn("rm", F.row_number().over(wm))
         .filter((F.col("rm") == 1) & (F.col("margin") >= margin_threshold))
         .select(
@@ -1455,10 +1163,8 @@ def margin_best_match(
             "cosine",
             "margin",
         )
-        .localCheckpoint(eager=True)
+        .orderBy("vec_a")
     )
-    scored.unpersist()
-    return out.orderBy("vec_a")
 
 
 def embedding_near_duplicates(
@@ -2020,7 +1726,6 @@ def label_disagreement_knn(
     label_col: str = "label",
     corpus_rows: "int | None" = None,
     arrow: bool = False,
-    arrow_score: "bool | None" = None,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -2050,7 +1755,6 @@ def label_disagreement_knn(
         vec_col=vec_col,
         corpus_rows=corpus_rows,
         arrow=arrow,
-        arrow_score=arrow_score,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
@@ -2103,7 +1807,6 @@ def bucket_cap_recall_account(
     reference_cap: int = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucket_local: bool = True,
 ) -> DataFrame:
     """The bucket_cap recall trade as ONE measured row: verified
     near-dup pairs with the production per-(table, bucket) occupancy
@@ -2126,20 +1829,19 @@ def bucket_cap_recall_account(
     a truncated reading is self-qualifying: 0 means the recall number
     is exact; >0 means it is measured against the bounded reference.
 
-    ``bucket_local`` (r11 optimization round, guide §2.3/§8): the
-    default verify is bucket-LOCAL — each (table, bucket) group scores
-    its own members with the same k-order float64 accumulation as
+    The verify is bucket-LOCAL: each (table, bucket) group scores its
+    own members with the same k-order float64 accumulation as
     :func:`_bucket_matmul_scores` (bit-identical to the ``cosine``
     expression fold), carrying the two arms' rank flags, and only thin
-    (vec_a, vec_b, cosine, hit) rows reach the pair-grain dedup.  The
-    legacy pair-attach form (banded self-join -> pair dedup -> join
-    both 64-dim vectors onto every pair -> interpreted fold per pair)
-    is exactly the shape the sf100 ladder killed for the bitext family
-    (SCALE.md round-11 part 2: pairs x 0.5 KB of exchange+spill); it
-    stays available as ``bucket_local=False`` for the parity pin.
-    Both arms agree bit-for-bit (unit-pinned) because cosine is a
-    pure, symmetric function of the pair and duplicate (table, bucket)
-    evaluations are value-identical.
+    (vec_a, vec_b, cosine, hit) rows reach the pair-grain dedup.  It is
+    the only scorer: the pair-attach form (banded self-join -> pair
+    dedup -> join both vectors onto every pair -> fold per pair) is
+    the shape the sf100 ladder killed for the bitext family (SCALE.md
+    round-11 part 2: pairs x 0.5 KB of exchange+spill), and it lives
+    on only as the test-local reference the bucket-local verify is
+    pinned against.  Duplicate (table, bucket) evaluations of a pair
+    are value-identical because cosine is a pure, symmetric function
+    of the pair.
 
     Returns the diagnostic EAGERLY (it is one global aggregate row):
     the banded frame's executor cache is released before returning —
@@ -2182,156 +1884,91 @@ def bucket_cap_recall_account(
             .filter(F.col("occ") > reference_cap)
             .count()
         )
-        if bucket_local:
-            # guide §2.3/§8: decide (and score) with bucket-local
-            # groups; never shuffle vectors on the pair grain.  Rank
-            # columns ride along so BOTH arms come out of one scoring
-            # pass.  Null / wrong-dim vectors keep their rank slot
-            # (banded is built from every row, as in the legacy arm)
-            # but can never produce a verified pair there either —
-            # their cosine is null — so dropping them from the scoring
-            # input is value-identical.
-            import numpy as np
-            import pandas as pd
+        # decide (and score) with bucket-local groups; never shuffle
+        # vectors on the pair grain.  Rank columns ride along so BOTH
+        # arms come out of one scoring pass.  Null / wrong-dim vectors
+        # keep their rank slot (banded is built from every row) but
+        # can never verify — their cosine would be null — so they are
+        # dropped from the scoring input.
+        vt = embeddings.schema[id_col].dataType.simpleString()
+        ref_v = (
+            banded.filter(F.col("_rn") <= reference_cap)
+            .join(
+                keyed.filter(
+                    F.col("vec").isNotNull()
+                    & (F.size(F.col("vec")) == dim)
+                ),
+                "vid",
+            )
+            .select("table_idx", "bucket", "vid", "_rn", "vec")
+        )
 
-            vt = embeddings.schema[id_col].dataType.simpleString()
-            ref_v = (
-                banded.filter(F.col("_rn") <= reference_cap)
-                .join(
-                    keyed.filter(
-                        F.col("vec").isNotNull()
-                        & (F.size(F.col("vec")) == dim)
-                    ),
-                    "vid",
+        def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            n = len(pdf)
+            empty = pd.DataFrame(
+                {"vec_a": [], "vec_b": [], "cos": [], "hit": []}
+            )
+            if n < 2:
+                return empty
+            V = np.vstack(pdf["vec"].to_numpy()).astype("float64")
+            nrm = np.zeros(n)
+            for k in range(dim):  # the SQL fold, k-order
+                nrm += V[:, k] * V[:, k]
+            if np.any(nrm == 0.0):
+                raise ArithmeticError(
+                    "[DIVIDE_BY_ZERO] zero-norm vector in cosine "
+                    "(ANSI parity with the expression path)"
                 )
-                .select("table_idx", "bucket", "vid", "_rn", "vec")
+            ids = pdf["vid"].to_numpy()
+            rn = pdf["_rn"].to_numpy()
+            acc = np.zeros((n, n))
+            for k in range(dim):  # k-order adds, per pair
+                acc += V[:, k : k + 1] * V[:, k]
+            raw = acc / (np.sqrt(nrm)[:, None] * np.sqrt(nrm)[None, :])
+            ia, ib = np.nonzero(ids[:, None] < ids[None, :])
+            return pd.DataFrame(
+                {
+                    "vec_a": ids[ia],
+                    "vec_b": ids[ib],
+                    "cos": raw[ia, ib],
+                    "hit": (rn[ia] <= bucket_cap)
+                    & (rn[ib] <= bucket_cap),
+                }
             )
 
-            def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-                n = len(pdf)
-                empty = pd.DataFrame(
-                    {"vec_a": [], "vec_b": [], "cos": [], "hit": []}
-                )
-                if n < 2:
-                    return empty
-                V = np.vstack(pdf["vec"].to_numpy()).astype("float64")
-                nrm = np.zeros(n)
-                for k in range(dim):  # the SQL fold, k-order
-                    nrm += V[:, k] * V[:, k]
-                if np.any(nrm == 0.0):
-                    raise ArithmeticError(
-                        "[DIVIDE_BY_ZERO] zero-norm vector in cosine "
-                        "(ANSI parity with the expression path)"
-                    )
-                ids = pdf["vid"].to_numpy()
-                rn = pdf["_rn"].to_numpy()
-                acc = np.zeros((n, n))
-                for k in range(dim):  # k-order adds, per pair
-                    acc += V[:, k : k + 1] * V[:, k]
-                raw = acc / (np.sqrt(nrm)[:, None] * np.sqrt(nrm)[None, :])
-                ia, ib = np.nonzero(ids[:, None] < ids[None, :])
-                return pd.DataFrame(
-                    {
-                        "vec_a": ids[ia],
-                        "vec_b": ids[ib],
-                        "cos": raw[ia, ib],
-                        "hit": (rn[ia] <= bucket_cap)
-                        & (rn[ib] <= bucket_cap),
-                    }
-                )
-
-            pair = (
-                ref_v.groupBy("table_idx", "bucket")
-                .applyInPandas(
-                    score,
-                    schema=(
-                        f"vec_a {vt}, vec_b {vt}, cos double, hit boolean"
-                    ),
-                )
-                # duplicate (table, bucket) evaluations of one pair are
-                # value-identical (same IEEE op order); max() keeps any
-                # one cosine and ORs the capped-arm flag exactly like
-                # the legacy semi-join
-                .groupBy("vec_a", "vec_b")
-                .agg(
-                    F.max("cos").alias("cos"),
-                    F.max(F.col("hit").cast("int")).alias("hit"),
-                )
+        pair = (
+            ref_v.groupBy("table_idx", "bucket")
+            .applyInPandas(
+                score,
+                schema=(
+                    f"vec_a {vt}, vec_b {vt}, cos double, hit boolean"
+                ),
             )
-            row = (
-                pair.filter(F.round(F.col("cos"), 6) >= F.lit(threshold))
-                .agg(
-                    F.count(F.lit(1)).alias("pairs_uncapped"),
+            # duplicate (table, bucket) evaluations of one pair are
+            # value-identical (same IEEE op order); max() keeps any
+            # one cosine and ORs the capped-arm flag
+            .groupBy("vec_a", "vec_b")
+            .agg(
+                F.max("cos").alias("cos"),
+                F.max(F.col("hit").cast("int")).alias("hit"),
+            )
+        )
+        row = (
+            pair.filter(F.round(F.col("cos"), 6) >= F.lit(threshold))
+            .agg(
+                F.count(F.lit(1)).alias("pairs_uncapped"),
+                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
+                .cast("bigint")
+                .alias("pairs_capped"),
+                F.round(
                     F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                    .cast("bigint")
-                    .alias("pairs_capped"),
-                    F.round(
-                        F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                        / F.count(F.lit(1))
-                        + 1e-9,
-                        6,
-                    ).alias("recall"),
-                )
-                .first()
+                    / F.count(F.lit(1))
+                    + 1e-9,
+                    6,
+                ).alias("recall"),
             )
-            return spark.createDataFrame(
-                [
-                    (
-                        row["pairs_uncapped"],
-                        row["pairs_capped"],
-                        row["recall"],
-                        n_truncated,
-                    )
-                ],
-                "pairs_uncapped bigint, pairs_capped bigint, recall double,"
-                " n_buckets_truncated bigint",
-            )
-        ref = banded.filter(F.col("_rn") <= reference_cap)
-        a, b = ref.alias("a"), ref.alias("b")
-        cand_u = (
-            a.join(
-                b,
-                (F.col("a.table_idx") == F.col("b.table_idx"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.vid") < F.col("b.vid")),
-            )
-            .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
-            .dropDuplicates(["vec_a", "vec_b"])
+            .first()
         )
-        kept = banded.filter(F.col("_rn") <= bucket_cap)
-        ka, kb = kept.alias("ka"), kept.alias("kb")
-        cand_c = (
-            ka.join(
-                kb,
-                (F.col("ka.table_idx") == F.col("kb.table_idx"))
-                & (F.col("ka.bucket") == F.col("kb.bucket"))
-                & (F.col("ka.vid") < F.col("kb.vid")),
-            )
-            .select(F.col("ka.vid").alias("vec_a"), F.col("kb.vid").alias("vec_b"))
-            .dropDuplicates(["vec_a", "vec_b"])
-            .withColumn("hit", F.lit(1))
-        )
-        va = keyed.select(F.col("vid").alias("vec_a"), F.col("vec").alias("va"))
-        vb = keyed.select(F.col("vid").alias("vec_b"), F.col("vec").alias("vb"))
-        verified = (
-            cand_u.join(cand_c, ["vec_a", "vec_b"], "left")
-            .join(va, "vec_a")
-            .join(vb, "vec_b")
-            .filter(
-                F.round(cosine(F.col("va"), F.col("vb")), 6) >= F.lit(threshold)
-            )
-        )
-        row = verified.agg(
-            F.count(F.lit(1)).alias("pairs_uncapped"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("pairs_capped"),
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.count(F.lit(1))
-                + 1e-9,
-                6,
-            ).alias("recall"),
-        ).first()
     finally:
         banded.unpersist()
     return spark.createDataFrame(

@@ -6,13 +6,17 @@ value-identical to the legacy path / an independent re-derivation.
 """
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from flink_elasticsearch_ingestion_spark.operators.relational import (
     join_size_estimate,
 )
 from flink_elasticsearch_ingestion_spark.operators.similarity import (
+    _hyperplanes,
     bucket_cap_recall_account,
+    cosine,
+    lsh_bucket_expr,
 )
 
 
@@ -20,16 +24,90 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _pair_attach_account(
+    embeddings, *, threshold, bits, tables, bucket_cap, reference_cap,
+    seed=42,
+):
+    """The pair-attach recall account, the reference the bucket-local
+    verify is pinned against: banded self-join per arm -> pair dedup ->
+    join both vectors onto every pair -> interpreted cosine fold."""
+    head = [
+        r[0] for r in embeddings.select("embedding").limit(64).collect()
+        if r[0] is not None
+    ]
+    dim = len(head[0])
+    keyed = embeddings.select(
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("vec")
+    )
+    buckets = [
+        lsh_bucket_expr("vec", _hyperplanes(dim, bits, seed + t)).alias(f"b{t}")
+        for t in range(tables)
+    ]
+    banded = keyed.select("vid", *buckets).select(
+        "vid",
+        F.posexplode(F.array(*[F.col(f"b{t}") for t in range(tables)])).alias(
+            "table_idx", "bucket"
+        ),
+    ).withColumn(
+        "_rn",
+        F.row_number().over(
+            Window.partitionBy("table_idx", "bucket").orderBy("vid")
+        ),
+    )
+    n_truncated = (
+        banded.groupBy("table_idx", "bucket")
+        .agg(F.max("_rn").alias("occ"))
+        .filter(F.col("occ") > reference_cap)
+        .count()
+    )
+
+    def candidates(cap):
+        arm = banded.filter(F.col("_rn") <= cap)
+        a, b = arm.alias("a"), arm.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.table_idx") == F.col("b.table_idx"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.vid") < F.col("b.vid")),
+            )
+            .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
+            .dropDuplicates(["vec_a", "vec_b"])
+        )
+
+    va = keyed.select(F.col("vid").alias("vec_a"), F.col("vec").alias("va"))
+    vb = keyed.select(F.col("vid").alias("vec_b"), F.col("vec").alias("vb"))
+    hit = F.coalesce(F.col("hit"), F.lit(0))
+    row = (
+        candidates(reference_cap)
+        .join(
+            candidates(bucket_cap).withColumn("hit", F.lit(1)),
+            ["vec_a", "vec_b"],
+            "left",
+        )
+        .join(va, "vec_a")
+        .join(vb, "vec_b")
+        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= F.lit(threshold))
+        .agg(
+            F.count(F.lit(1)).alias("pairs_uncapped"),
+            F.sum(hit).cast("bigint").alias("pairs_capped"),
+            F.round(F.sum(hit) / F.count(F.lit(1)) + 1e-9, 6).alias("recall"),
+        )
+        .first()
+    )
+    return [(*row, n_truncated)]
+
+
 class TestBucketCapRecallBucketLocal:
-    """bucket_local=True (default, bucket-local cogroup scoring) must be
-    bit-identical to the legacy pair-attach arm (bucket_local=False)."""
+    """The bucket-local verify (grouped numpy scoring) must be
+    bit-identical to the pair-attach reference."""
 
     def test_parity_on_fixture(self, spark, sf_dir):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         kw = dict(threshold=0.4, bits=4, tables=8, bucket_cap=8,
                   reference_cap=256)
         new = _rows(bucket_cap_recall_account(emb, **kw))
-        old = _rows(bucket_cap_recall_account(emb, bucket_local=False, **kw))
+        old = _pair_attach_account(emb, **kw)
         assert new == old
         # the account is non-trivial on the fixture
         assert new[0][0] > 0
@@ -41,13 +119,13 @@ class TestBucketCapRecallBucketLocal:
         kw = dict(threshold=0.2, bits=2, tables=4, bucket_cap=2,
                   reference_cap=8)
         new = _rows(bucket_cap_recall_account(emb, **kw))
-        old = _rows(bucket_cap_recall_account(emb, bucket_local=False, **kw))
+        old = _pair_attach_account(emb, **kw)
         assert new == old
         assert new[0][3] > 0  # n_buckets_truncated really exercised
 
     def test_parity_with_null_and_wrong_dim_vectors(self, spark, sf_dir):
         # null / wrong-dim rows occupy rank slots but never score —
-        # both arms must agree on that
+        # the verify and the reference must agree on that
         emb = (
             spark.read.parquet(f"{sf_dir}/embeddings.parquet")
             .select("vec_id", "embedding")
@@ -65,7 +143,7 @@ class TestBucketCapRecallBucketLocal:
         kw = dict(threshold=0.3, bits=3, tables=4, bucket_cap=4,
                   reference_cap=16)
         new = _rows(bucket_cap_recall_account(dirty, **kw))
-        old = _rows(bucket_cap_recall_account(dirty, bucket_local=False, **kw))
+        old = _pair_attach_account(dirty, **kw)
         assert new == old
 
 

@@ -1,7 +1,7 @@
 """Round-12 OPTIMIZATION-round parity pins.
 
 Each test pins an optimization that changed an operator's internals
-(OPTIMIZATION_r12.md): the optimized default path must be
+(round 12 in ROADMAP.md "Recent"): the optimized default path must be
 value-identical (bit-identical where the contract says so) to the
 legacy path / an independent re-derivation.
 """
@@ -343,22 +343,40 @@ class TestBitextSinglePass:
         assert jsc.getPersistentRDDs().size() == before
 
     def test_mismatched_id_types_take_legacy_arm_and_agree(self, spark, sf_dir):
-        """int-vs-long ids route to the legacy two-aggregate arm; the
-        pairs must agree with the single-pass result on the same data,
-        and the arm's persist must be RELEASED (only the GC-managed
-        result checkpoint may remain)."""
+        """Left and right ids of different types (int vs bigint, numeric
+        string vs bigint) go through the same single-pass plan: rows,
+        row order and dtypes equal the two-aggregate / three-consumer
+        reference on the same scored frame (so ties break in each id's
+        native order), and nothing is left persisted or checkpointed."""
         left, right = _halves(spark, sf_dir)
+        # ids, not a count: late in a session the ContextCleaner may
+        # release blocks other tests left, shrinking the count meanwhile
+        persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731
+        before = persisted()
+        # int ids order like bigint ids: the same pairs as same-type ids
         left_int = left.withColumn("vec_id", F.col("vec_id").cast("int"))
-        jsc = spark.sparkContext._jsc.sc()
-        before = jsc.getPersistentRDDs().size()
         got = _rows(mutual_best_match(left_int, right, **self.KW))
         want = _rows(mutual_best_match(left, right, **self.KW))
-        assert [(int(a), int(b), c) for a, b, c in got] == [
-            (int(a), int(b), c) for a, b, c in want
-        ]
-        # scored-frame persist released; at most the result-sized
-        # localCheckpoint block remains (GC-managed)
-        assert jsc.getPersistentRDDs().size() <= before + 1
+        assert [(int(a), int(b), c) for a, b, c in got] == want
+        for id_type in ("int", "string"):
+            left_t = left.withColumn("vec_id", F.col("vec_id").cast(id_type))
+            scored = _lsh_scored_pairs(
+                left_t, right, seed=42, query_id="vec_id",
+                corpus_id="vec_id", vec_col="embedding", **self.KW,
+            )
+            for got, want in (
+                (mutual_best_match(left_t, right, **self.KW),
+                 _legacy_mutual(scored)),
+                (margin_best_match(left_t, right, **self.KW),
+                 _legacy_margin(scored)),
+            ):
+                assert got.dtypes == want.dtypes
+                assert dict(got.dtypes)["vec_a"] == id_type
+                assert dict(got.dtypes)["vec_b"] == "bigint"
+                rows = [tuple(r) for r in got.collect()]
+                assert rows == [tuple(r) for r in want.collect()]
+                assert len(rows) > 0
+        assert persisted() - before == set()
 
 
 # -- containment_pairs posting-intersection verify ----------------------------

@@ -57,20 +57,3 @@ def test_null_safe_join_keeps_null_bucket(spark, sf_dir):
     statuses = {r["status_norm"] for r in out}
     assert None in statuses  # the P bucket, normalized to NULL, survives
     assert sum(r["n_orders"] for r in out) == orders.count()
-
-
-def test_observed_copy_metrics_ride_the_action(spark, sf_dir):
-    """df.observe metrics must report exactly the written rows, with no
-    second source scan."""
-    from flink_elasticsearch_ingestion_spark.operators.copy import observed_copy
-    from flink_elasticsearch_ingestion_spark.sources.tables import load_events
-
-    events = load_events(spark, sf_dir)
-    df, obs = observed_copy(events, checkpoint_ts="2024-01-15 00:00:00")
-    n = df.count()  # the "sink action"
-    got = obs.get
-    assert got["n_docs"] == n
-    assert got["max_ts"] is not None
-    # approx distinct within HLL tolerance of the exact count
-    exact = df.select("doc_id").distinct().count()
-    assert abs(got["n_distinct_docs"] - exact) <= max(2, exact * 0.05)

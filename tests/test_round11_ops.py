@@ -124,8 +124,8 @@ def test_scroll_context_released_and_missing_context_404(server):
 
 
 # ---------------------------------------------------------------------------
-# Arrow exact-cosine scoring twin (_arrow_pair_cosines) — bit parity
-# with the aggregate/zip_with expression form (VERDICT r10 #3)
+# The LSH candidate stage's two scorers (arrow=False: the interpreted
+# aggregate/zip_with fold; arrow=True: bucket-local numpy) — bit parity
 # ---------------------------------------------------------------------------
 import struct
 
@@ -147,41 +147,25 @@ def _emb_frame(spark, n=400, dim=16, seed=11):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_arrow_score_bit_parity_mutual_end_to_end(spark):
-    """mutual_best_match with the Arrow scoring stage is BIT-identical
-    to the expression form (same candidates: the bucket stage is held
-    on the expression path on both sides)."""
-    emb = _emb_frame(spark)
-    left = emb.filter(F.col("vec_id") % 2 == 0)
-    right = emb.filter(F.col("vec_id") % 2 == 1)
-    kw = dict(bits=4, tables=8, corpus_rows=400)
-    a = S.mutual_best_match(left, right, arrow=False, arrow_score=False, **kw)
-    b = S.mutual_best_match(left, right, arrow=False, arrow_score=True, **kw)
-    ra = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in a.collect()]
-    rb = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in b.collect()]
-    assert len(ra) > 10
-    assert ra == rb
-
-
 def test_bucket_score_bit_parity_mutual_margin_knn(spark):
-    """arrow_score="bucket" (bucket-local matmul, the sixth-decade
-    default for arrow=True) is bit-identical to the fold on mutual,
-    margin AND the knn rank surface — the dedup keeps any one of the
-    per-table duplicate scores, which are themselves bit-identical."""
+    """arrow=True (BLAS banding + bucket-local matmul scoring) is
+    bit-identical to arrow=False (the fold) on mutual, margin AND the
+    knn rank surface — the dedup keeps any one of the per-table
+    duplicate scores, which are themselves bit-identical."""
     emb = _emb_frame(spark, n=320, dim=16, seed=47)
     left = emb.filter(F.col("vec_id") % 2 == 0)
     right = emb.filter(F.col("vec_id") % 2 == 1)
     kw = dict(bits=4, tables=8, corpus_rows=320)
-    a = S.mutual_best_match(left, right, arrow_score=False, **kw)
-    b = S.mutual_best_match(left, right, arrow_score="bucket", **kw)
+    a = S.mutual_best_match(left, right, arrow=False, **kw)
+    b = S.mutual_best_match(left, right, arrow=True, **kw)
     ra = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in a.collect()]
     rb = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in b.collect()]
     assert len(ra) > 10 and ra == rb
-    ma = S.margin_best_match(left, right, arrow_score=False, **kw)
-    mb = S.margin_best_match(left, right, arrow_score="bucket", **kw)
+    ma = S.margin_best_match(left, right, arrow=False, **kw)
+    mb = S.margin_best_match(left, right, arrow=True, **kw)
     assert sorted(map(tuple, ma.collect())) == sorted(map(tuple, mb.collect()))
-    ka = S.knn_join_lsh(left.limit(15), emb, k=3, arrow_score=False, **kw)
-    kb = S.knn_join_lsh(left.limit(15), emb, k=3, arrow_score="bucket", **kw)
+    ka = S.knn_join_lsh(left.limit(15), emb, k=3, arrow=False, **kw)
+    kb = S.knn_join_lsh(left.limit(15), emb, k=3, arrow=True, **kw)
     pa = [(r.query_id, r.neighbor_id, r.rank, _bits(r.cosine)) for r in ka.collect()]
     pb = [(r.query_id, r.neighbor_id, r.rank, _bits(r.cosine)) for r in kb.collect()]
     assert len(pa) == 45 and pa == pb
@@ -198,97 +182,47 @@ def test_bucket_score_zero_norm_raises(spark):
         S.mutual_best_match(
             emb.filter(F.col("vec_id") % 2 == 0),
             emb.filter(F.col("vec_id") % 2 == 1),
-            bits=2, tables=2, corpus_rows=4, arrow_score="bucket",
+            bits=2, tables=2, corpus_rows=4, arrow=True,
             center_check=False,
         ).collect()
 
 
-def test_unrolled_score_bit_parity(spark):
-    """arrow_score="unrolled" (flat left-deep codegen expression) is
-    bit-identical to the interpreted fold on well-formed input — the
-    left-deep chain replays the fold's IEEE addition order.  (Measured
-    r11: wins at sf10 where the ~600-op codegen method still JITs,
-    loses at sf30 to JIT method limits + GC — kept as a documented
-    opt-in, the arrow pair scorer is the scale default.)"""
-    emb = _emb_frame(spark, n=300, dim=16, seed=31)
-    left = emb.filter(F.col("vec_id") % 2 == 0)
-    right = emb.filter(F.col("vec_id") % 2 == 1)
-    kw = dict(bits=4, tables=8, corpus_rows=300)
-    a = S.mutual_best_match(left, right, arrow_score=False, **kw)
-    b = S.mutual_best_match(left, right, arrow_score="unrolled", **kw)
-    ra = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in a.collect()]
-    rb = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in b.collect()]
-    assert len(ra) > 10 and ra == rb
-
-
-def test_arrow_score_bit_parity_margin_and_knn(spark):
-    emb = _emb_frame(spark, n=240, dim=8, seed=23)
-    left = emb.filter(F.col("vec_id") % 2 == 0)
-    right = emb.filter(F.col("vec_id") % 2 == 1)
-    kw = dict(bits=4, tables=8, corpus_rows=240)
-    a = S.margin_best_match(left, right, arrow_score=False, **kw)
-    b = S.margin_best_match(left, right, arrow_score=True, **kw)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    ka = S.knn_join_lsh(left.limit(20), emb, k=3, arrow_score=False, **kw)
-    kb = S.knn_join_lsh(left.limit(20), emb, k=3, arrow_score=True, **kw)
-    pa = [(r.query_id, r.neighbor_id, r.rank, _bits(r.cosine)) for r in ka.collect()]
-    pb = [(r.query_id, r.neighbor_id, r.rank, _bits(r.cosine)) for r in kb.collect()]
-    assert len(pa) == 60 and pa == pb
-
-
-def test_arrow_pair_cosines_degenerate_parity(spark):
-    """Null vectors, length-mismatched pairs, and NaN elements degrade
-    IDENTICALLY to the expression form: NULL for the first two (the
-    zip_with null-padding semantics), NaN-as-a-value for the third."""
-    rows = [
-        (1, 1, [1.0, 2.0, 3.0], [1.0, 2.0, 4.0]),       # normal
-        (2, 2, None, [1.0, 2.0, 3.0]),                  # null q
-        (3, 3, [1.0, 2.0, 3.0], None),                  # null c
-        (4, 4, [1.0, 2.0], [1.0, 2.0, 3.0]),            # len mismatch
-        (5, 5, [float("nan"), 1.0, 0.0], [1.0, 1.0, 1.0]),  # NaN element
-        (6, 6, [0.5, 0.5], [0.25, -0.5]),               # short dim
-    ]
-    pairs = spark.createDataFrame(
-        rows,
-        "query_id long, neighbor_id long, "
-        "q_vec array<double>, c_vec array<double>",
-    )
-    expr = pairs.select(
-        "query_id",
-        F.round(S.cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine"),
-    ).collect()
-    arrow = (
-        S._arrow_pair_cosines(pairs)
-        .select(
-            "query_id",
-            F.round(
-                F.when(F.col("nan_flag"), F.lit(float("nan"))).otherwise(
-                    F.col("cosine_raw")
-                ),
-                6,
-            ).alias("cosine"),
+def test_knn_scorers_agree_on_degenerate_vectors(spark):
+    """Null vectors, wrong-dim vectors and NaN elements degrade
+    IDENTICALLY on both scorers, bit-for-bit: the first two never
+    collide (banding drops them), a NaN element collides and scores as
+    a NaN value (never NULL, never dropped) on both paths."""
+    emb = _emb_frame(spark, n=60, dim=8, seed=5)
+    dirty = emb.unionByName(
+        spark.createDataFrame(
+            [
+                (1000, None),                               # null vector
+                (1001, [0.5, -0.25, 1.0]),                  # wrong dim
+                (1002, [float("nan")] + [0.5] * 7),         # NaN element
+                (1003, [1.0, float("nan")] + [-0.5] * 6),   # NaN element
+            ],
+            "vec_id long, embedding array<float>",
         )
-        .collect()
     )
-    ea = {r.query_id: _bits(r.cosine) for r in expr}
-    aa = {r.query_id: _bits(r.cosine) for r in arrow}
-    assert ea == aa
-    assert aa[2] is None and aa[3] is None and aa[4] is None
-    assert struct.unpack("<d", bytes.fromhex(aa[5]))[0] != aa[5]  # NaN bits present
-    assert np.isnan(struct.unpack("<d", bytes.fromhex(aa[5]))[0])
-
-
-def test_arrow_pair_cosines_zero_norm_raises(spark):
-    """ANSI parity: a zero-norm vector raises (the expression path
-    raises DIVIDE_BY_ZERO under Spark 4 ANSI) rather than silently
-    emitting Inf/NaN."""
-    pairs = spark.createDataFrame(
-        [(1, 1, [0.0, 0.0], [1.0, 2.0])],
-        "query_id long, neighbor_id long, "
-        "q_vec array<double>, c_vec array<double>",
+    queries = dirty.filter(
+        (F.col("vec_id") < 10) | (F.col("vec_id") >= 1000)
     )
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S._arrow_pair_cosines(pairs).collect()
+    kw = dict(k=4, bits=2, tables=4, corpus_rows=64, center_check=False)
+
+    def rows(arrow):
+        return [
+            (r.query_id, r.neighbor_id, r.rank, _bits(r.cosine))
+            for r in S.knn_join_lsh(queries, dirty, arrow=arrow, **kw).collect()
+        ]
+
+    fold, bucket = rows(False), rows(True)
+    assert fold == bucket
+    ids = {q for q, _, _, _ in fold} | {n for _, n, _, _ in fold}
+    assert 1000 not in ids and 1001 not in ids
+    nan_rows = [r for r in fold if 1002 in r[:2] or 1003 in r[:2]]
+    assert nan_rows and all(
+        np.isnan(struct.unpack("<d", bytes.fromhex(c))[0]) for *_, c in nan_rows
+    )
 
 
 # ---------------------------------------------------------------------------
