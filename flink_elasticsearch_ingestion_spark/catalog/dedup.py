@@ -70,7 +70,6 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.4,
         band_cap=None,
-        arrow=True,
     )
 
 def q_duplicate_token_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +83,7 @@ def q_duplicate_token_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg over a map-side token count."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
+        docs, jaccard_threshold=0.4, band_cap=None
     )
     dup_ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -120,7 +119,7 @@ def q_cross_source_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow id-keyed joins, then a |sources|^2-bounded aggregate."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
+        docs, jaccard_threshold=0.4, band_cap=None
     )
     src = docs.select("doc_id", "source")
     j = pairs.join(
@@ -170,7 +169,6 @@ def q_quality_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.4,
         band_cap=None,
-        arrow=True,
     )
 
 def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,7 +287,6 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         jaccard_threshold=0.4,
         band_cap=None,
-        arrow=True,
     )
 
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,7 +302,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "split"
     )
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
+        docs, jaccard_threshold=0.4, band_cap=None
     )
     sa = split.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     sb = split.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
@@ -326,12 +323,8 @@ def q_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs touching the batch (an equivalence the operator guarantees)."""
     docs = _t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 10 == 7
-    cs = D.minhash_signature_table(
-        docs.filter(~is_new), arrow=True
-    ).persist()
-    ns = D.minhash_signature_table(
-        docs.filter(is_new), arrow=True
-    ).persist()
+    cs = D.minhash_signature_table(docs.filter(~is_new)).persist()
+    ns = D.minhash_signature_table(docs.filter(is_new)).persist()
     cs.count(), ns.count()  # eager fill: see minhash_near_duplicates
     # materialize the (tiny) pair result, then RELEASE the two
     # corpus-scale signature caches — the caller collects from the
@@ -445,7 +438,7 @@ def q_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     pairs = D.minhash_near_duplicates(
-        docs, jaccard_threshold=0.4, band_cap=None, arrow=True
+        docs, jaccard_threshold=0.4, band_cap=None
     )
     dup_drop = (
         pairs.join(s1.withColumnRenamed("doc_id", "doc_a"), "doc_a", "semi")
@@ -635,9 +628,7 @@ def q_minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket count and implied candidate-pair budget — the
     observability readout that predicts band_cap truncation and join
     cost BEFORE the pair join runs."""
-    return D.minhash_band_stats(
-        _t(spark, sf_dir, "documents"), arrow=True
-    )
+    return D.minhash_band_stats(_t(spark, sf_dir, "documents"))
 
 
 #: driver-contract queries owned by this family (names are the

@@ -403,7 +403,6 @@ def q_streaming_admission_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         n_polls=3,
         jaccard_threshold=0.4,
-        arrow=True,  # bit-identical vectorized signature twin (r10)
     )
 
 

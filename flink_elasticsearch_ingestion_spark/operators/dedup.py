@@ -9,7 +9,8 @@ sharing a band) -> exact Jaccard verify on the candidate pairs. At
 tunable via (bands, rows-per-band).
 
 Everything below is built-in expressions (hash/xxhash64/transform/
-aggregate) — no MLlib, no Python UDFs.
+aggregate), except the MinHash signature kernel: one vectorized
+``mapInPandas`` stage. No MLlib, no row-at-a-time Python UDFs.
 """
 
 from __future__ import annotations
@@ -32,10 +33,12 @@ from flink_elasticsearch_ingestion_spark.operators.util import (
 # end-to-end by an independent SQL engine.  DuckDB twin of portable_hash31:
 #     ('0x' || substr(md5(s), 1, 8))::BIGINT % 2147483647
 # Feature hashes are 31-bit, so SimHash signatures carry at most 31 bits.
-# Cost: one md5 per token, dearer than the JVM's xxhash64; the Arrow twin
-# (``minhash_signature_table(arrow=True)``) recovers part of that.  A
-# faster engine-specific family would give results no other engine can
-# check, so there is no second family.
+# Cost: one md5 per token, dearer than the JVM's xxhash64; the one
+# signature kernel (``minhash_signature_table``, vectorized numpy over
+# Arrow batches, md5 memoized per batch) recovers part of that.  Its bit
+# parity with a pure-SQL build is pinned against
+# ``tests/minhash_reference.py``.  A faster engine-specific family would
+# give results no other engine can check, so there is no second family.
 # ---------------------------------------------------------------------------
 
 MERSENNE31 = 2147483647  # 2^31 - 1, prime; modulus of the affine perms
@@ -69,26 +72,6 @@ def portable_hash31(col: F.Column) -> F.Column:
 POLY_C = 1000003
 
 
-def portable_minhash_signature(hashes: F.Column, num_hashes: int = 16) -> F.Column:
-    """MinHash signature over portable 31-bit shingle hashes using the
-    classic affine family h_j(x) = (a_j*x + b_j) mod (2^31-1) with the
-    module-constant ``MINHASH_COEFFS`` — every product stays below
-    2^62, so plain BIGINT arithmetic is exact in both engines (no raw
-    64-bit multiply, ANSI-safe)."""
-    A = F.array(*[F.lit(a) for a, _ in MINHASH_COEFFS[:num_hashes]])
-    B = F.array(*[F.lit(b) for _, b in MINHASH_COEFFS[:num_hashes]])
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda j: F.array_min(
-            F.transform(
-                hashes,
-                lambda h: (F.element_at(A, j + 1) * h + F.element_at(B, j + 1))
-                % F.lit(MERSENNE31),
-            )
-        ),
-    )
-
-
 def dedup_exact(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Exact dedup by key — one shuffle; deterministic representative
     (min of all other columns per key) so tests and re-runs agree."""
@@ -109,22 +92,6 @@ def dedup_by_content(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 #: see operators.util.bind_once — the HOF once-per-row binding trick
 _bind_once = bind_once
-
-
-def char_shingles(col: str = "text", k: int = 5) -> F.Column:
-    """Distinct k-char shingles of the normalized text, as an array.
-    Pure expression: sequence + transform + substring (no explode until
-    the caller wants rows). The normalize runs once per row
-    (``_bind_once``), not once per shingle position."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(col))), "\\s+", " ")
-
-    def build(s: F.Column) -> F.Column:
-        n = F.greatest(F.length(s) - F.lit(k - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: s.substr(i, F.lit(k)))
-        )
-
-    return _bind_once(normalized, build)
 
 
 def word_shingles(col: str = "text", k: int = 3) -> F.Column:
@@ -229,29 +196,40 @@ def simhash64(hashed_col: str, bits: int = 64) -> F.Column:
     return F.expr(sig)
 
 
-def _arrow_signature_table(
+def minhash_signature_table(
     documents: DataFrame,
     *,
-    word_k: int | None,
-    shingle_k: int,
-    num_hashes: int,
-    id_col: str,
-    text_col: str,
+    word_k: int | None = 3,
+    shingle_k: int = 5,
+    num_hashes: int = 16,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """Arrow/numpy twin of the PORTABLE signature build — the measured
-    100 TB-wall constant of the MinHash family (the 16-perm portable
-    map stage under ``minhash_band_stats`` ran exactly linear but at
-    124 s/sf10; see SCALE.md). Bit-identical to the expression form
-    (parity unit-pinned, same oracle hashes), same discipline as
-    similarity's ``_arrow_banded``:
+    """(doc_id, shingles, sig): the materializable signature table —
+    hashed shingle sets (``array<bigint>``, ~1% of corpus size on
+    prose) plus the MinHash signature. At 100 TB, write THIS to parquet
+    once and run every near-dup pass against it
+    (``write_signature_table`` / ``near_duplicates_from_signatures``)
+    instead of re-shingling the corpus per run.
 
-    - normalize/tokenize replicated operator-for-operator: ``trim``
-      strips ASCII space only, ``\\s`` is the Java ASCII class, and
-      the split keeps empty tokens — each matching the Spark
-      expression, not the Python defaults;
+    Shingles are ``word_k`` word n-grams, or ``shingle_k`` char n-grams
+    when ``word_k`` is None. Hashes are the md5-31 family (module
+    comment above), so an independent SQL engine can re-derive the
+    identical signatures: the pure-SQL build lives in
+    ``tests/minhash_reference.py``, and the parity tests pin this
+    kernel to it bit for bit.
+
+    One map stage over Arrow batches, numpy inside — the measured
+    100 TB-wall constant of the MinHash family (the 16-perm map stage
+    under ``minhash_band_stats`` ran exactly linear but at 124 s/sf10
+    as a SQL expression; see SCALE.md):
+
+    - normalize/tokenize replicated operator-for-operator from the SQL
+      form: ``trim`` strips ASCII space only, ``\\s`` is the Java
+      ASCII class, and the split keeps empty tokens — each matching the
+      Spark expression, not the Python defaults;
     - md5-31 token hashes memoized per batch (Zipf: the unique-token
-      count is a small fraction of occurrences — the expression form
-      re-hashes every occurrence);
+      count is a small fraction of occurrences);
     - the poly shingle combine runs as k vectorized int64 passes over
       a sliding window view; every intermediate stays < 2^62 exactly
       as in the SQL fold;
@@ -259,10 +237,9 @@ def _arrow_signature_table(
       modmul over the batch-concatenated shingle array with a
       segment-min (``np.minimum.reduceat``) per doc.
 
-    Null text degrades identically to the expression form:
-    ``shingles = [null]`` (the HOF fold over a null input collapses to
-    a single null element, not a null array) and sig = array of
-    ``num_hashes`` nulls."""
+    Null text degrades as the SQL fold does: ``shingles = [null]`` (the
+    HOF fold over a null input collapses to a single null element, not
+    a null array) and sig = array of ``num_hashes`` nulls."""
     import numpy as np
     import pandas as pd
 
@@ -369,64 +346,6 @@ def _arrow_signature_table(
     )
 
 
-def minhash_signature_table(
-    documents: DataFrame,
-    *,
-    word_k: int | None = 3,
-    shingle_k: int = 5,
-    num_hashes: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    arrow: bool = False,
-) -> DataFrame:
-    """(doc_id, shingles, sig): the materializable signature table —
-    hashed shingle sets (``array<bigint>``, ~1% of corpus size on
-    prose) plus the MinHash signature. At 100 TB, write THIS to parquet
-    once and run every near-dup pass against it
-    (``write_signature_table`` / ``near_duplicates_from_signatures``)
-    instead of re-shingling the corpus per run.
-
-    Hashes are the md5-31 family (module comment above), so an
-    independent SQL engine can re-derive the identical signatures.
-
-    ``arrow=True`` computes the identical table with the vectorized
-    Arrow twin (:func:`_arrow_signature_table`) — same values, same
-    oracle hashes, measured faster on the md5 + 16-perm map stage."""
-    if arrow:
-        return _arrow_signature_table(
-            documents,
-            word_k=word_k,
-            shingle_k=shingle_k,
-            num_hashes=num_hashes,
-            id_col=id_col,
-            text_col=text_col,
-        )
-    if word_k:
-        # two-step build: token hashes behind a column boundary so the
-        # string-hash pass runs once per row, not once per gram (see
-        # shingle_table)
-        shingled = shingle_table(
-            documents,
-            word_k=word_k,
-            id_col=id_col,
-            text_col=text_col,
-        )
-    else:
-        char_expr = F.array_distinct(
-            F.transform(
-                char_shingles(text_col, shingle_k), lambda s: portable_hash31(s)
-            )
-        )
-        shingled = ensure_parallelism(documents).select(
-            F.col(id_col).alias("doc_id"), char_expr.alias("shingles")
-        )
-    return shingled.select(
-        "doc_id",
-        "shingles",
-        portable_minhash_signature(F.col("shingles"), num_hashes).alias("sig"),
-    )
-
-
 def write_signature_table(documents: DataFrame, path: str, **kwargs) -> None:
     """Materialize the MinHash signature table to parquet — the scale
     analog of the in-memory persist barrier the direct operator uses."""
@@ -529,7 +448,6 @@ def minhash_near_duplicates(
     id_col: str = "doc_id",
     text_col: str = "text",
     band_cap: int | None = 1000,
-    arrow: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding + exact verify.
 
@@ -562,7 +480,6 @@ def minhash_near_duplicates(
         num_hashes=num_hashes,
         id_col=id_col,
         text_col=text_col,
-        arrow=arrow,
     ).persist()
     # Fill the cache EAGERLY: persist() alone is lazy, and the first
     # action schedules the band join's four consumers (left/right band
@@ -1004,7 +921,6 @@ def near_dup_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     band_cap: int | None = 1000,
-    arrow: bool = False,
 ) -> DataFrame:
     """The dedup capstone: MinHash near-dup pairs -> connected
     components -> one row per cluster with its size and kept
@@ -1018,7 +934,6 @@ def near_dup_clusters(
         id_col=id_col,
         text_col=text_col,
         band_cap=band_cap,
-        arrow=arrow,
     )
     comp = connected_components(pairs)
     return (
@@ -1767,7 +1682,6 @@ def near_dup_threshold_sweep(
         id_col=id_col,
         text_col=text_col,
         band_cap=None,
-        arrow=True,  # bit-identical vectorized signature twin
     ).select("doc_a", "doc_b", "jaccard")
     spark = documents.sparkSession
     pair_hist = pairs.groupBy(
@@ -1934,7 +1848,6 @@ def contrastive_triples(
         id_col=id_col,
         text_col=text_col,
         band_cap=None,
-        arrow=True,  # bit-identical vectorized signature twin
     ).select(
         F.col("doc_a").alias("anchor"),
         F.col("doc_b").alias("positive"),
@@ -1987,7 +1900,6 @@ def quality_dedup_survivors(
     id_col: str = "doc_id",
     text_col: str = "text",
     band_cap: int | None = 1000,
-    arrow: bool = False,
 ) -> DataFrame:
     """Quality-aware canonical selection per near-dup cluster: where
     ``near_dup_clusters`` keeps the MIN doc id (a tie-break, not a
@@ -2010,7 +1922,6 @@ def quality_dedup_survivors(
         id_col=id_col,
         text_col=text_col,
         band_cap=band_cap,
-        arrow=arrow,
     )
     comp = connected_components(pairs)
     ent = token_entropy(documents, id_col=id_col, text_col=text_col).select(
@@ -2212,8 +2123,9 @@ def containment_pairs(
     Returns (contained_id, container_id, containment), containment
     rounded to 6 dp.
     """
-    sigs = minhash_signature_table(documents, arrow=True,
-                                   id_col=id_col, text_col=text_col).select(
+    sigs = minhash_signature_table(
+        documents, id_col=id_col, text_col=text_col
+    ).select(
         F.col(id_col).alias("doc"), F.col("shingles").alias("sh")
     ).persist()
     sigs.count()  # eager fill (see minhash_near_duplicates)
@@ -2424,7 +2336,6 @@ def planted_dup_recall(
         combined,
         jaccard_threshold=jaccard_threshold,
         band_cap=None,
-        arrow=True,
     )
     planted = base.select(
         F.col("doc_id").alias("doc_a"),
@@ -2472,7 +2383,7 @@ def minhash_estimate_error(
     fat error -> band thresholds drift from the theory).
 
     Scale shape: identical to ``minhash_near_duplicates`` — one
-    signature map stage (arrow twin), one banded ids-only self-join
+    signature map stage, one banded ids-only self-join
     (``band_cap``-bounded), one verify join carrying both signatures
     and shingle sets, one global aggregate.  Portable hash family, so
     the DuckDB oracle re-derives estimate AND exact value per pair."""
@@ -2482,7 +2393,6 @@ def minhash_estimate_error(
         num_hashes=num_hashes,
         id_col=id_col,
         text_col=text_col,
-        arrow=True,
     ).persist()
     sigs.count()  # eager fill (see minhash_near_duplicates)
     banded = _banded(sigs.select("doc_id", "sig"), num_hashes=num_hashes, bands=bands)
@@ -2685,7 +2595,6 @@ def minhash_band_stats(
     bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    arrow: bool = False,
 ) -> DataFrame:
     """LSH band-bucket occupancy histogram — the observability number
     behind every MinHash dedup run: per band, how many buckets hold
@@ -2705,7 +2614,6 @@ def minhash_band_stats(
         num_hashes=num_hashes,
         id_col=id_col,
         text_col=text_col,
-        arrow=arrow,
     ).select("doc_id", "sig")
     banded = _banded(sigs, num_hashes=num_hashes, bands=bands)
     buckets = banded.groupBy("band_idx", "band_hash").agg(

@@ -1282,7 +1282,9 @@ def embedding_near_duplicates(
                 X = np.vstack(pdf["vec"].to_numpy())  # n x dim
                 if bucket_shift is not None:
                     X = X - float(bucket_shift)
-                signs = (X @ P) >= 0  # n x (tables*bits)
+                # ~(d < 0), not d >= 0: a NaN dot goes to the 1 side,
+                # where the SQL form's NaN-above-every-number order puts it
+                signs = ~((X @ P) < 0)  # n x (tables*bits)
                 bks = signs.reshape(len(pdf), tables, bits) @ weights
                 yield pd.DataFrame(
                     {

@@ -409,47 +409,30 @@ def stream_incremental_dedup(
     rewrites exactly its own output (the per-epoch-manifest pattern the
     es_bulk stream writer uses). Admission policy is greedy by id: a
     batch document near-duplicating ANY store document or an
-    earlier-id batch document is rejected."""
-    from flink_elasticsearch_ingestion_spark.operators.dedup import (
-        minhash_signature_table,
-        near_duplicates_incremental,
+    earlier-id batch document is rejected. Each trigger is one
+    ``streaming.pipeline.admit_batch`` round, the admission the scroll
+    ingest pipeline and its catalog replay run."""
+    from flink_elasticsearch_ingestion_spark.streaming.pipeline import (
+        admit_batch,
+        prior_store,
     )
 
     schema = read_parquet(spark, source_path).schema
 
-    def _store_batches(path: str) -> list[str]:
-        if not os.path.isdir(path):
-            return []
-        return [
-            os.path.join(path, d)
-            for d in sorted(os.listdir(path))
-            if d.startswith("batch=")
-        ]
-
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signature_table(batch_df, num_hashes=num_hashes).persist()
-        sigs.count()  # eager fill (see minhash_near_duplicates)
-        prior = [
-            p for p in _store_batches(sig_store_path)
-            if int(p.rsplit("=", 1)[-1]) < batch_id
-        ]
-        if prior:
-            store = spark.read.parquet(*prior)
-        else:
-            store = spark.createDataFrame([], sigs.schema)
-        dups = near_duplicates_incremental(
-            store,
-            sigs,
+        survivors, survivor_sigs, _drop, sigs = admit_batch(
+            spark,
+            batch_df,
+            prior_store(spark, sig_store_path, batch_id),
+            jaccard_threshold=jaccard_threshold,
             num_hashes=num_hashes,
             bands=bands,
-            jaccard_threshold=jaccard_threshold,
+            band_cap=1000,
         )
-        drop = dups.select(F.col("new_id").alias("doc_id")).distinct()
-        survivors = batch_df.join(drop, "doc_id", "left_anti")
         survivors.write.mode("overwrite").parquet(
             f"{accepted_path}/batch={batch_id}"
         )
-        sigs.join(drop, "doc_id", "left_anti").write.mode("overwrite").parquet(
+        survivor_sigs.write.mode("overwrite").parquet(
             f"{sig_store_path}/batch={batch_id}"
         )
         sigs.unpersist()

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_elasticsearch_ingestion_spark.operators.dedup import (
+    _make_tracked_checkpoint,
     minhash_signature_table,
     near_duplicates_incremental,
 )
@@ -53,7 +54,6 @@ def admit_batch(
     num_hashes: int = 16,
     bands: int = 8,
     band_cap: int | None = None,
-    arrow: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
     batch_sigs: DataFrame | None = None,
@@ -82,8 +82,7 @@ def admit_batch(
     sigs = batch_sigs
     if sigs is None:
         sigs = minhash_signature_table(
-            batch_docs, num_hashes=num_hashes,
-            arrow=arrow, id_col=id_col, text_col=text_col,
+            batch_docs, num_hashes=num_hashes, id_col=id_col, text_col=text_col
         )
     sigs = sigs.persist()
     sigs.count()  # eager fill (see minhash_near_duplicates)
@@ -110,7 +109,6 @@ def multi_poll_admission(
     jaccard_threshold: float = 0.4,
     num_hashes: int = 16,
     bands: int = 8,
-    arrow: bool = False,
 ) -> DataFrame:
     """Deterministic batch replay of the streaming admission pipeline:
     split ``docs`` into ``n_polls`` arrival waves by ``doc_id %
@@ -121,17 +119,18 @@ def multi_poll_admission(
 
     Returns one row per poll: arrivals, admissions, rejections and the
     admitted volume/mean-size monitors — the per-epoch monitor row the
-    streaming pipeline logs.
+    streaming pipeline logs. The rows are collected to the driver (one
+    per poll) and returned as a local frame, so the result holds no
+    cached blocks, and every cache and checkpoint the replay made is
+    released before it returns.
     """
     spark = docs.sparkSession
-    summaries = []
+    tracked_checkpoint = _make_tracked_checkpoint(spark.sparkContext)
+    rows, blocks = [], []
     store_sigs: DataFrame | None = None
     # shingle + minhash the corpus ONCE; each poll joins its slice
-    all_sigs = minhash_signature_table(
-        docs, num_hashes=num_hashes, arrow=arrow
-    ).persist()
+    all_sigs = minhash_signature_table(docs, num_hashes=num_hashes).persist()
     all_sigs.count()
-    cached = [all_sigs]
     for poll in range(n_polls):
         batch = docs.filter(F.col("doc_id") % n_polls == poll)
         survivors, survivor_sigs, drop, batch_sigs = admit_batch(
@@ -151,13 +150,12 @@ def multi_poll_admission(
         # materialized LogicalRDDs — the plan the foreachBatch stream
         # actually has, since it re-reads the signature store from
         # parquet each epoch.
-        survivor_sigs = survivor_sigs.localCheckpoint(eager=True)
+        survivor_sigs, new_blocks = tracked_checkpoint(survivor_sigs)
+        blocks += new_blocks
         batch_sigs.unpersist()  # the slice cache served its one poll
-        # ONE aggregate over the flagged batch — no 1-row scalar joins;
-        # eagerly checkpointed so the returned union is 3 tiny 1-row
-        # scans, not 3 copies of the admission tree.
+        # ONE aggregate over the flagged batch — no 1-row scalar joins
         adm = F.col("__drop").isNull()
-        summaries.append(
+        rows.append(
             batch.join(drop.withColumn("__drop", F.lit(1)), "doc_id", "left")
             .agg(
                 F.lit(poll).alias("poll"),
@@ -168,20 +166,38 @@ def multi_poll_admission(
                 .cast("bigint")
                 .alias("admitted_chars"),
             )
-            .localCheckpoint(eager=True)
+            .first()
         )
         store_sigs = (
             survivor_sigs
             if store_sigs is None
             else store_sigs.unionByName(survivor_sigs)
         )
-    out = summaries[0]
-    for s in summaries[1:]:
-        out = out.unionByName(s)
-    out = out.orderBy("poll")
-    for c in cached:
-        c.unpersist()
-    return out
+    all_sigs.unpersist()
+    for h in blocks:
+        h.unpersist(False)
+    return spark.createDataFrame(
+        rows,
+        "poll int, n_arrived bigint, n_admitted bigint, n_rejected bigint,"
+        " admitted_chars bigint",
+    ).orderBy("poll")
+
+
+def prior_store(
+    spark: SparkSession, sig_store: str, batch_id: int
+) -> DataFrame | None:
+    """The admitted-so-far signature store as of epoch ``batch_id``:
+    every ``batch=<epoch>`` slice under ``sig_store`` with an earlier
+    epoch, or None before the first admission. Reading only earlier
+    epochs keeps a replayed epoch from seeing its own admissions."""
+    if not os.path.isdir(sig_store):
+        return None
+    prior = [
+        os.path.join(sig_store, d)
+        for d in sorted(os.listdir(sig_store))
+        if d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
+    ]
+    return spark.read.parquet(*prior) if prior else None
 
 
 def stream_scroll_ingest_pipeline(
@@ -233,23 +249,13 @@ def stream_scroll_ingest_pipeline(
     monitor = os.path.join(work_dir, "monitor")
     bulk_out = os.path.join(work_dir, "bulk")
 
-    def _prior_store(batch_id: int) -> DataFrame | None:
-        if not os.path.isdir(sig_store):
-            return None
-        prior = [
-            os.path.join(sig_store, d)
-            for d in sorted(os.listdir(sig_store))
-            if d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-        ]
-        return spark.read.parquet(*prior) if prior else None
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         docs = last_wins(batch_df, key="doc_id", order_col="ts").persist()
         n_seen = batch_df.count()
         survivors, survivor_sigs, _drop, sigs = admit_batch(
             spark,
             docs.withColumn("n_chars", F.length("source").cast("bigint")),
-            _prior_store(batch_id),
+            prior_store(spark, sig_store, batch_id),
             jaccard_threshold=jaccard_threshold,
             num_hashes=num_hashes,
             bands=bands,

@@ -86,14 +86,19 @@ def test_minhash_signature_estimates_jaccard(spark, a, overlap):
     """Signature slot agreement between two token sets approximates
     their true Jaccard: E[match fraction] = J; with 64 hashes the
     error stays within ~4 sigma = 4*sqrt(J(1-J)/64) + slack. The
-    signature is the md5-31 affine family over md5-31 token hashes."""
+    signature is the md5-31 affine family over md5-31 token hashes:
+    the package kernel with 1-word shingles over the space-joined
+    tokens, so each shingle is one token."""
     b = a | overlap  # supersets give controllable overlap
     true_j = len(a & b) / len(a | b)
-    df = spark.createDataFrame([(list(a),), (list(b),)], "toks array<string>")
-    hashed = F.array_distinct(F.transform(F.col("toks"), D.portable_hash31))
-    sig = df.select(
-        D.portable_minhash_signature(hashed, num_hashes=64).alias("sig")
-    ).collect()
+    df = spark.createDataFrame(
+        [(0, " ".join(a)), (1, " ".join(b))], "doc_id int, text string"
+    )
+    sig = sorted(
+        D.minhash_signature_table(df, word_k=1, num_hashes=64)
+        .select("doc_id", "sig")
+        .collect()
+    )
     s1, s2 = sig[0].sig, sig[1].sig
     est = sum(1 for x, y in zip(s1, s2) if x == y) / 64
     tol = 4 * (true_j * (1 - true_j) / 64) ** 0.5 + 0.02

@@ -284,7 +284,7 @@ def test_hash_family_recall_parity(spark, keep_num, keep_den):
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     n_planted = 300
     pairs = D.minhash_near_duplicates(
-        corpus, jaccard_threshold=0.4, band_cap=None, arrow=True
+        corpus, jaccard_threshold=0.4, band_cap=None
     )
     found = (
         pairs.filter(F.col("doc_b") - F.col("doc_a") == 1_000_000)

@@ -1222,6 +1222,36 @@ def test_embedding_lsh_arrow_matches_expression(spark, sf_dir):
     assert a == b and a
 
 
+def test_embedding_lsh_arrow_buckets_nan_like_expression(spark):
+    """A NaN element makes a NaN plane dot. Spark orders NaN above every
+    number, so the expression form puts that sign on the 1 side; the
+    BLAS bucket path must do the same, or the NaN vectors pair with
+    different partners on the two paths."""
+    import random
+
+    from flink_elasticsearch_ingestion_spark.operators.similarity import (
+        embedding_near_duplicates,
+    )
+
+    rng = random.Random(7)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    rows += [
+        (40, [float("nan")] + [0.5] * 7),
+        (41, [1.0, float("nan")] + [-0.5] * 6),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs(arrow):
+        out = embedding_near_duplicates(
+            emb, threshold=-2.0, bits=2, tables=2, arrow=arrow
+        )
+        return sorted((r["vec_a"], r["vec_b"]) for r in out.collect())
+
+    got = pairs(True)
+    assert got == pairs(False)
+    assert any(40 in p for p in got) and any(41 in p for p in got)
+
+
 def test_embedding_dup_clusters_are_consistent(spark, sf_dir):
     import __spark_entry__ as E
 
