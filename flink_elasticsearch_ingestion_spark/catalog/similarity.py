@@ -171,9 +171,6 @@ def q_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.label_disagreement_knn(
         _t(spark, sf_dir, "embeddings"), k=5, bits="auto", tables=4,
         corpus_rows=_nrows(sf_dir, "embeddings"),
-        # r11: arrow banding + bucket-local scoring (bit-parity pinned;
-        # the pair-attach vector shuffle was the sf100 disk wall)
-        arrow=True,
     )
 
 def q_centroid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,13 +308,11 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # inlined plane literals assume), growing log2 with the corpus
         # so the bucket self-join stays ~linear. The old fixed bits=6
         # measured 15x wall-clock on a 10x corpus (sf1 spot-run,
-        # SCALE.md). arrow=True: per-partition BLAS bucket matmul
-        # (parity-tested against the expression form, the oracle twin)
+        # SCALE.md).
         _t(spark, sf_dir, "embeddings"),
         threshold=0.4,
         bits="auto",
         tables=8,
-        arrow=True,
         corpus_rows=_nrows(sf_dir, "embeddings"),
     )
     edges = pairs.select(
@@ -367,12 +362,6 @@ def q_mutual_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits="auto",
         tables=8,
         corpus_rows=_nrows(sf_dir, "embeddings"),
-        # per-batch BLAS bucket matmul (parity-tested against the
-        # expression form, the oracle twin) — under auto bits the
-        # per-vector bucket cost is tables x bits dots, the n log n
-        # term the sf1->sf3 ladder measured at exp 1.1 on the
-        # interpreted-HOF path (SCALE.md)
-        arrow=True,
     )
 
 def q_margin_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,7 +379,6 @@ def q_margin_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits="auto",
         tables=8,
         corpus_rows=_nrows(sf_dir, "embeddings"),
-        arrow=True,
     )
 
 def q_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,10 +521,9 @@ def q_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: driver-contract queries owned by this family (names are the
 #: catalog keys the driver and the oracle gate use verbatim)
 def q_string_id_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """knn_join_lsh over STRING document ids on the Arrow bucket path —
-    the id-type parity the round-9 `_arrow_banded` fix guarantees (the
-    mapInPandas schema now derives the id field from the input type
-    instead of hardcoding long). Rank ties break on the string id,
+    """knn_join_lsh over STRING document ids: the bucket kernel
+    (`_arrow_banded`) derives its id field from the input type, so the
+    ids come back as strings. Rank ties break on the string id,
     identically in the SQL oracle's collation (ASCII codepoints)."""
     emb = _t(spark, sf_dir, "embeddings").select(
         F.concat(F.lit("doc_"), F.col("vec_id").cast("string")).alias("vec_id"),
@@ -549,7 +536,6 @@ def q_string_id_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=4,
         bits=4,
         tables=8,
-        arrow=True,
     )
     return out
 
@@ -560,8 +546,7 @@ def q_centered_mutual_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-9 closure of the LSH centering gap (round 7's 40x
     bucket-collapse class): the shift recenters the sign projection
     (the exact-cosine verify still scores the original features), and
-    the oracle replays the shifted planes bit-for-bit. Arrow bucket
-    path (BLAS matmul with the same shift)."""
+    the oracle replays the shifted planes bit-for-bit."""
     from flink_elasticsearch_ingestion_spark.catalog import multimodal as MM
 
     feats = MM.M.sha_features_expr(
@@ -575,7 +560,6 @@ def q_centered_mutual_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits=4,
         tables=4,
         bucket_shift=0.5,
-        arrow=True,
     )
 
 

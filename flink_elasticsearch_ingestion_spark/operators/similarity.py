@@ -180,27 +180,18 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(bits)]
 
 
-def lsh_bucket(vec_col: F.Column, planes: list[list[float]]) -> F.Column:
-    """Random-hyperplane signature -> integer bucket id (sign bits)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(dot(vec_col, p) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
 def lsh_bucket_expr(vec_name: str, planes: list[list[float]]) -> F.Column:
-    """``lsh_bucket`` built as ONE parsed SQL expression.
+    """Random-hyperplane signature -> integer bucket id (sign bits),
+    built as ONE parsed SQL expression: bit i is set when the
+    ``aggregate``/``zip_with`` dot with plane i is ``>= 0``.
 
-    Semantically identical (same zip_with/aggregate dot, same sign
-    bits, same OR chain) but constructed with a single F.expr parse
-    instead of ~bits x dim Py4J literal round-trips — with multi-table
-    banding (tables x bits x dim literals per side) the Column-by-Column
-    build dominates DRIVER time (~3s at 8 tables x 4 bits x 64 dims)
-    while the string parse is milliseconds.  Python float repr
-    round-trips exactly through Spark's double literal syntax, so the
-    planes are bit-identical to the F.lit path.
+    A single F.expr parse instead of ~bits x dim Py4J literal
+    round-trips — with multi-table banding (tables x bits x dim
+    literals per side) a Column-by-Column build dominates DRIVER time
+    (~3s at 8 tables x 4 bits x 64 dims) while the string parse is
+    milliseconds.  Python float repr round-trips exactly through
+    Spark's double literal syntax, so the planes are bit-identical to
+    ``F.lit`` literals.
     """
     dim = len(planes[0]) if planes else 0
     terms = []
@@ -512,7 +503,6 @@ def knn_join_lsh(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     corpus_rows: "int | None" = None,
-    arrow: bool = False,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -550,7 +540,6 @@ def knn_join_lsh(
         query_id=query_id,
         corpus_id=corpus_id,
         vec_col=vec_col,
-        arrow=arrow,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
@@ -576,20 +565,22 @@ def _arrow_banded(
     vec_col: str,
     bucket_shift: "float | None" = None,
 ) -> DataFrame:
-    """(id, table_idx, bucket) triples via ONE BLAS matmul per record
-    batch — the Arrow twin of the ``lsh_bucket_expr`` explode, same
-    plane family (seed + t per table), same accepted numerical caveat
-    as ``embedding_near_duplicates``'s arrow path: numpy's pairwise
-    summation and the SQL left fold could disagree on a plane dot
-    within ~1e-14 of zero; the exact-cosine verify downstream defines
-    the final pairs either way.
+    """(id, table_idx, bucket) triples of multi-table sign-LSH: the
+    bucket of table t packs the sign bits of the ``bits`` planes
+    ``_hyperplanes(dim, bits, seed + t)``, the plane family the DuckDB
+    oracle inlines.  ONE BLAS matmul per record batch computes every
+    (table, bit) plane dot at once — numpy-vectorized, immune to the
+    interpreted-HOF session warm-up cliff (SCALE.md).  Accepted
+    numerical caveat: numpy's pairwise summation and the SQL left fold
+    of :func:`lsh_bucket_expr` could disagree on a plane dot within
+    ~1e-14 of zero; the exact-cosine verify downstream defines the
+    final pairs either way.
 
-    Parity with the expression path on dirty input: null vectors and
-    vectors of the wrong dimension are dropped per batch BEFORE the
-    vstack (the expression form yields null buckets that fall out of
-    the equi-join; vstack would raise on the same rows).  The output
-    id column carries the INPUT id type (string doc ids survive
-    ``arrow=True`` identically to the expression path)."""
+    ``bucket_shift`` is subtracted from every component before the
+    projection only.  Null vectors and vectors whose size is not
+    ``dim`` have no plane dots: they are dropped up front and never
+    produce a bucket.  The output id column keeps the INPUT id type
+    (string doc ids come back as strings)."""
     import numpy as np
     import pandas as pd
 
@@ -606,10 +597,6 @@ def _arrow_banded(
 
     def bucketize(batches):
         for pdf in batches:
-            keep = pdf["__vec"].map(
-                lambda v: v is not None and len(v) == dim
-            )
-            pdf = pdf[keep]
             if not len(pdf):
                 continue
             X = np.vstack(pdf["__vec"].to_numpy())  # n x dim
@@ -630,9 +617,9 @@ def _arrow_banded(
                 }
             )
 
-    narrow = df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias("__vec")
-    )
+    narrow = df.filter(
+        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
+    ).select(F.col(id_col).alias(out_id), F.col(vec_col).alias("__vec"))
     return narrow.mapInPandas(
         bucketize, schema=f"{out_id} {id_type}, table_idx int, bucket long"
     )
@@ -691,7 +678,7 @@ def _bucket_matmul_scores(
         if np.any(nq == 0.0) or np.any(nc == 0.0):
             raise ArithmeticError(
                 "[DIVIDE_BY_ZERO] zero-norm vector in cosine "
-                "(ANSI parity with the expression path)"
+                "(ANSI parity with the cosine fold)"
             )
         qids = qg["query_id"].to_numpy()
         nids = cg["neighbor_id"].to_numpy()
@@ -739,7 +726,6 @@ def _lsh_scored_pairs(
     query_id: str,
     corpus_id: str,
     vec_col: str,
-    arrow: bool = False,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -750,19 +736,13 @@ def _lsh_scored_pairs(
     (rank ties downstream break on the rounded value + id, identically
     to the DuckDB oracle).
 
-    One scorer per ``arrow`` value, bit-identical to each other
-    (unit-pinned, same oracle hashes):
-
-    - ``arrow=False``: ids-only bucket join and dedup, then both
-      vectors re-attach to each distinct pair and the interpreted
-      ``aggregate``/``zip_with`` fold scores it (the oracle's literal
-      twin).
-    - ``arrow=True``: the bucket triples come from a per-batch BLAS
-      matmul (:func:`_arrow_banded`) and each (table, bucket) scores
-      its own members (:func:`_bucket_matmul_scores`), so vectors ship
-      once per band membership and never on the pair grain — the
-      pair-attach shape's ~130 GB spill at sf100 filled the disk
-      (SCALE.md, round 11 part 2).
+    Vectors are banded by :func:`_arrow_banded` (which drops null and
+    wrong-dimension vectors), and each (table, bucket) scores its own
+    members (:func:`_bucket_matmul_scores`), so a vector ships once
+    per band membership and never on the pair grain — the pair-attach
+    shape's ~130 GB spill at sf100 filled the disk (SCALE.md, round 11
+    part 2).  Every cosine is bit-identical to the :func:`cosine` fold
+    the oracle replays.
 
     ``bucket_shift`` / ``center_check``: the same off-center guard as
     ``embedding_near_duplicates`` — sign-LSH on all-positive features
@@ -792,99 +772,36 @@ def _lsh_scored_pairs(
     if center_check and bucket_shift is None:
         _warn_if_off_center(head, strict=(center_check == "strict"))
 
-    if bucket_shift is not None:
-        shifted = f"transform({vec_col}, x -> CAST(x AS DOUBLE) - {float(bucket_shift)!r}D)"
-    else:
-        shifted = None
-
-    def banded(df: DataFrame, id_col: str, out_id: str) -> DataFrame:
-        # null / wrong-dimension vectors can never produce a candidate
-        # (their plane dots are undefined); drop them explicitly so BOTH
-        # forms degrade identically on dirty input — the unrolled
-        # low-dim expression would otherwise raise on element_at past a
-        # short array, and the arrow vstack on a null row
-        df = df.filter(
-            F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
-        )
-        if arrow:
-            return _arrow_banded(
-                df, id_col, out_id,
-                dim=dim, bits=bits, tables=tables, seed=seed, vec_col=vec_col,
-                bucket_shift=bucket_shift,
-            )
-        # ids-only, same discipline as the minhash band self-join: the
-        # bucket-collision shuffle must never carry vectors — a 64-dim
-        # float vector is ~50x the width of the (id, table, bucket)
-        # triple, and duplicate collisions (up to `tables` per pair)
-        # would all pay it
-        lsh_vec = vec_col
-        if shifted is not None:
-            df = df.withColumn("__vec_lsh", F.expr(shifted))
-            lsh_vec = "__vec_lsh"
-        buckets = [
-            lsh_bucket_expr(lsh_vec, _hyperplanes(dim, bits, seed + t)).alias(f"b{t}")
-            for t in range(tables)
-        ]
-        return df.select(F.col(id_col).alias(out_id), *buckets).select(
-            out_id,
-            F.posexplode(F.array(*[F.col(f"b{t}") for t in range(tables)])).alias(
-                "table_idx", "bucket"
-            ),
-        )
-
-    bq = banded(queries, query_id, "query_id")
-    bc = banded(corpus, corpus_id, "neighbor_id")
-    if arrow:
-        # bq/bc are ids-only: re-attach the vector per (id, table,
-        # bucket) row with one narrow keyed join per side; dedup happens
-        # on the thin scored rows
-        ql = bq.join(
-            queries.select(
-                F.col(query_id).alias("query_id"),
-                F.col(vec_col).alias("__vec"),
-            ),
-            "query_id",
-        )
-        cl = bc.join(
-            corpus.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(vec_col).alias("__vec"),
-            ),
-            "neighbor_id",
-        )
-        return _bucket_matmul_scores(ql, cl, dim=dim).select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.when(F.col("nan_flag"), F.lit(float("nan"))).otherwise(
-                    F.col("cosine_raw")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    cand_ids = (
-        bq.join(
-            bc,
-            (bq["table_idx"] == bc["table_idx"]) & (bq["bucket"] == bc["bucket"]),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
+    band = dict(
+        dim=dim, bits=bits, tables=tables, seed=seed, vec_col=vec_col,
+        bucket_shift=bucket_shift,
     )
-    # vectors re-attach AFTER the ids-only dedup: one narrow keyed join
-    # per side (AQE broadcasts the vector tables when they fit; at
-    # corpus scale they shuffle as narrow (id, vec) pairs exactly once)
-    q_vecs = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("q_vec")
+    bq = _arrow_banded(queries, query_id, "query_id", **band)
+    bc = _arrow_banded(corpus, corpus_id, "neighbor_id", **band)
+    # bq/bc are ids-only: re-attach the vector per (id, table, bucket)
+    # row with one narrow keyed join per side; dedup happens on the
+    # thin scored rows
+    ql = bq.join(
+        queries.select(
+            F.col(query_id).alias("query_id"), F.col(vec_col).alias("__vec")
+        ),
+        "query_id",
     )
-    c_vecs = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    cl = bc.join(
+        corpus.select(
+            F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__vec")
+        ),
+        "neighbor_id",
     )
-    pairs = cand_ids.join(q_vecs, "query_id").join(c_vecs, "neighbor_id")
-    return pairs.select(
+    return _bucket_matmul_scores(ql, cl, dim=dim).select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine"),
+        F.round(
+            F.when(F.col("nan_flag"), F.lit(float("nan"))).otherwise(
+                F.col("cosine_raw")
+            ),
+            6,
+        ).alias("cosine"),
     )
 
 
@@ -934,7 +851,6 @@ def mutual_best_match(
     right_id: str = "vec_id",
     vec_col: str = "embedding",
     corpus_rows: "int | None" = None,
-    arrow: bool = False,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -963,8 +879,8 @@ def mutual_best_match(
     The left and right ids may have different types (int vs bigint,
     string vs bigint): the plan is the same, ``vec_a`` keeps the left
     id's type and ``vec_b`` the right's, and the result is a lazy
-    frame with no cached or checkpointed blocks. The scorer is the
-    one ``arrow`` selects (see :func:`_lsh_scored_pairs`).
+    frame with no cached or checkpointed blocks. Candidates and
+    scores come from :func:`_lsh_scored_pairs`.
 
     ``corpus_rows`` contract for ``bits="auto"``: pass the row count
     of the FULL vector universe the planes must discriminate (e.g. the
@@ -993,7 +909,6 @@ def mutual_best_match(
         query_id=left_id,
         corpus_id=right_id,
         vec_col=vec_col,
-        arrow=arrow,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
@@ -1045,7 +960,6 @@ def margin_best_match(
     right_id: str = "vec_id",
     vec_col: str = "embedding",
     corpus_rows: "int | None" = None,
-    arrow: bool = False,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -1094,7 +1008,6 @@ def margin_best_match(
         query_id=left_id,
         corpus_id=right_id,
         vec_col=vec_col,
-        arrow=arrow,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
@@ -1175,7 +1088,6 @@ def embedding_near_duplicates(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = False,
     bucket_shift: "float | None" = None,
     bucket_cap: "int | None" = None,
     corpus_rows: "int | None" = None,
@@ -1214,6 +1126,11 @@ def embedding_near_duplicates(
     wall-clock); shifting by 0.5 rebalances the signs and restores
     ~uniform occupancy. A constant (not a data-dependent mean) keeps
     the bucket family deterministic and oracle-replayable.
+
+    Buckets come from :func:`_arrow_banded`, so ``id_col`` may be any
+    orderable type (string ids come back as strings) and rows whose
+    vector is null or whose size differs from the first non-null
+    vector's are dropped: they are in no pair.
     """
     from flink_elasticsearch_ingestion_spark.operators.util import (
         ensure_parallelism,
@@ -1233,83 +1150,19 @@ def embedding_near_duplicates(
     if center_check and bucket_shift is None and head:
         _warn_if_off_center(head, strict=(center_check == "strict"))
     # the bucket build is the CPU-heavy map stage (tables x bits plane
-    # dots per vector, interpreted HOF): spread a narrow local scan to
-    # full parallelism (no-op at real scale)
+    # dots per vector): spread a narrow local scan to full parallelism
+    # (no-op at real scale)
     keyed = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
     )
-    lsh_vec = "vec"
-    if bucket_shift is not None:
-        keyed = keyed.withColumn(
-            "vec_lsh",
-            F.expr(
-                f"transform(vec, x -> CAST(x AS DOUBLE)"
-                f" - {float(bucket_shift)!r}D)"
-            ),
-        )
-        lsh_vec = "vec_lsh"
-    buckets = [
-        lsh_bucket_expr(lsh_vec, _hyperplanes(dim, bits, seed + t)).alias(f"b{t}")
-        for t in range(tables)
-    ]
     # persist + eager fill: the self-join consumes the banded frame on
     # BOTH sides, and the sign-LSH bucket computation is the CPU-heavy
     # map stage — without the barrier it evaluates twice (and the two
     # join sides race the cold cache; see the token_set_join lesson)
-    if arrow:
-        # Arrow path: ONE BLAS matmul per record batch computes every
-        # (table, bit) plane dot at once — numpy-vectorized, immune to
-        # the interpreted-HOF session warm-up cliff (SCALE.md). Same
-        # accepted numerical caveat as ivf_assign's argmax: numpy's
-        # pairwise summation and the SQL left fold could disagree on a
-        # dot within ~1e-14 of zero; signs at that margin are
-        # vanishingly rare and the exact-cosine verify defines the
-        # final pairs either way.
-        import numpy as np
-        import pandas as pd
-
-        P = np.array(
-            [
-                _hyperplanes(dim, bits, seed + t)[i]
-                for t in range(tables)
-                for i in range(bits)
-            ]
-        ).T  # dim x (tables*bits)
-        weights = np.array([1 << i for i in range(bits)], dtype="int64")
-
-        def bucketize(batches):
-            for pdf in batches:
-                X = np.vstack(pdf["vec"].to_numpy())  # n x dim
-                if bucket_shift is not None:
-                    X = X - float(bucket_shift)
-                # ~(d < 0), not d >= 0: a NaN dot goes to the 1 side,
-                # where the SQL form's NaN-above-every-number order puts it
-                signs = ~((X @ P) < 0)  # n x (tables*bits)
-                bks = signs.reshape(len(pdf), tables, bits) @ weights
-                yield pd.DataFrame(
-                    {
-                        "vid": pdf["vid"].to_numpy().repeat(tables),
-                        "table_idx": np.tile(
-                            np.arange(tables, dtype="int32"), len(pdf)
-                        ),
-                        "bucket": bks.reshape(-1),
-                    }
-                )
-
-        banded = keyed.mapInPandas(
-            bucketize, schema="vid long, table_idx int, bucket long"
-        ).persist()
-    else:
-        banded = (
-            keyed.select("vid", *buckets)
-            .select(
-                "vid",
-                F.posexplode(
-                    F.array(*[F.col(f"b{t}") for t in range(tables)])
-                ).alias("table_idx", "bucket"),
-            )
-            .persist()
-        )
+    banded = _arrow_banded(
+        keyed, "vid", "vid", dim=dim, bits=bits, tables=tables, seed=seed,
+        vec_col="vec", bucket_shift=bucket_shift,
+    ).persist()
     banded.count()
     if bucket_cap is not None:
         # per-(table, bucket) occupancy cap — the minhash band_cap
@@ -1323,11 +1176,15 @@ def embedding_near_duplicates(
         # when the cap actually truncates, the dropped-row count is
         # surfaced as a runtime warning (the judge's round-7 ask — a
         # recall trade the sf0.01 oracle can never observe must be
-        # visible in scale runs). Sized so it never fires at oracle
-        # scale, so the extra count job scans an empty filter there.
-        w = Window.partitionBy("table_idx", "bucket").orderBy("vid")
-        ranked = banded.withColumn("_rn", F.row_number().over(w)).persist()
-        truncated = ranked.filter(F.col("_rn") > bucket_cap).count()
+        # visible in scale runs).  The count is one occupancy
+        # aggregate over the cached banded frame, so the cap pins no
+        # second cache.
+        truncated = (
+            banded.groupBy("table_idx", "bucket")
+            .count()
+            .agg(F.sum(F.greatest(F.col("count") - bucket_cap, F.lit(0))))
+            .first()[0]
+        )
         if truncated:
             warnings.warn(
                 f"bucket_cap={bucket_cap} truncated {truncated} banded "
@@ -1336,7 +1193,12 @@ def embedding_near_duplicates(
                 f"recall is being traded for tail-skew bound. Raise "
                 f"bucket_cap or bits if this grows with the corpus."
             )
-        banded = ranked.filter(F.col("_rn") <= bucket_cap).drop("_rn")
+        w = Window.partitionBy("table_idx", "bucket").orderBy("vid")
+        banded = (
+            banded.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= bucket_cap)
+            .drop("_rn")
+        )
     a, b = banded.alias("a"), banded.alias("b")
     candidates = (
         a.join(
@@ -1727,7 +1589,6 @@ def label_disagreement_knn(
     id_col: str = "vec_id",
     label_col: str = "label",
     corpus_rows: "int | None" = None,
-    arrow: bool = False,
     bucket_shift: "float | None" = None,
     center_check: "bool | str" = True,
 ) -> DataFrame:
@@ -1756,7 +1617,6 @@ def label_disagreement_knn(
         corpus_id=id_col,
         vec_col=vec_col,
         corpus_rows=corpus_rows,
-        arrow=arrow,
         bucket_shift=bucket_shift,
         center_check=center_check,
     )
@@ -1919,7 +1779,7 @@ def bucket_cap_recall_account(
             if np.any(nrm == 0.0):
                 raise ArithmeticError(
                     "[DIVIDE_BY_ZERO] zero-norm vector in cosine "
-                    "(ANSI parity with the expression path)"
+                    "(ANSI parity with the cosine fold)"
                 )
             ids = pdf["vid"].to_numpy()
             rn = pdf["_rn"].to_numpy()

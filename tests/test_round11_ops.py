@@ -124,112 +124,14 @@ def test_scroll_context_released_and_missing_context_404(server):
 
 
 # ---------------------------------------------------------------------------
-# The LSH candidate stage's two scorers (arrow=False: the interpreted
-# aggregate/zip_with fold; arrow=True: bucket-local numpy) — bit parity
-# ---------------------------------------------------------------------------
-import struct
-
-import numpy as np
-
-from pyspark.sql import functions as F
-
-from flink_elasticsearch_ingestion_spark.operators import similarity as S
-
-
-def _bits(x):
-    return None if x is None else struct.pack("<d", x).hex()
-
-
-def _emb_frame(spark, n=400, dim=16, seed=11):
-    rng = np.random.RandomState(seed)
-    vecs = rng.randn(n, dim).astype("float32")
-    rows = [(i, [float(v) for v in vecs[i]]) for i in range(n)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_bucket_score_bit_parity_mutual_margin_knn(spark):
-    """arrow=True (BLAS banding + bucket-local matmul scoring) is
-    bit-identical to arrow=False (the fold) on mutual, margin AND the
-    knn rank surface — the dedup keeps any one of the per-table
-    duplicate scores, which are themselves bit-identical."""
-    emb = _emb_frame(spark, n=320, dim=16, seed=47)
-    left = emb.filter(F.col("vec_id") % 2 == 0)
-    right = emb.filter(F.col("vec_id") % 2 == 1)
-    kw = dict(bits=4, tables=8, corpus_rows=320)
-    a = S.mutual_best_match(left, right, arrow=False, **kw)
-    b = S.mutual_best_match(left, right, arrow=True, **kw)
-    ra = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in a.collect()]
-    rb = [(r.vec_a, r.vec_b, _bits(r.cosine)) for r in b.collect()]
-    assert len(ra) > 10 and ra == rb
-    ma = S.margin_best_match(left, right, arrow=False, **kw)
-    mb = S.margin_best_match(left, right, arrow=True, **kw)
-    assert sorted(map(tuple, ma.collect())) == sorted(map(tuple, mb.collect()))
-    ka = S.knn_join_lsh(left.limit(15), emb, k=3, arrow=False, **kw)
-    kb = S.knn_join_lsh(left.limit(15), emb, k=3, arrow=True, **kw)
-    pa = [(r.query_id, r.neighbor_id, r.rank, _bits(r.cosine)) for r in ka.collect()]
-    pb = [(r.query_id, r.neighbor_id, r.rank, _bits(r.cosine)) for r in kb.collect()]
-    assert len(pa) == 45 and pa == pb
-
-
-def test_bucket_score_zero_norm_raises(spark):
-    """ANSI parity on the bucket path: a zero-norm vector raises."""
-    # zero vectors on BOTH sides: every plane dot is 0 -> >= 0 -> the
-    # all-ones bucket on both, so the collision (and the zero norm in
-    # a non-empty cogroup) is guaranteed
-    rows = [(0, [0.0] * 8), (1, [0.0] * 8), (2, [0.5] * 8), (3, [1.0] * 8)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S.mutual_best_match(
-            emb.filter(F.col("vec_id") % 2 == 0),
-            emb.filter(F.col("vec_id") % 2 == 1),
-            bits=2, tables=2, corpus_rows=4, arrow=True,
-            center_check=False,
-        ).collect()
-
-
-def test_knn_scorers_agree_on_degenerate_vectors(spark):
-    """Null vectors, wrong-dim vectors and NaN elements degrade
-    IDENTICALLY on both scorers, bit-for-bit: the first two never
-    collide (banding drops them), a NaN element collides and scores as
-    a NaN value (never NULL, never dropped) on both paths."""
-    emb = _emb_frame(spark, n=60, dim=8, seed=5)
-    dirty = emb.unionByName(
-        spark.createDataFrame(
-            [
-                (1000, None),                               # null vector
-                (1001, [0.5, -0.25, 1.0]),                  # wrong dim
-                (1002, [float("nan")] + [0.5] * 7),         # NaN element
-                (1003, [1.0, float("nan")] + [-0.5] * 6),   # NaN element
-            ],
-            "vec_id long, embedding array<float>",
-        )
-    )
-    queries = dirty.filter(
-        (F.col("vec_id") < 10) | (F.col("vec_id") >= 1000)
-    )
-    kw = dict(k=4, bits=2, tables=4, corpus_rows=64, center_check=False)
-
-    def rows(arrow):
-        return [
-            (r.query_id, r.neighbor_id, r.rank, _bits(r.cosine))
-            for r in S.knn_join_lsh(queries, dirty, arrow=arrow, **kw).collect()
-        ]
-
-    fold, bucket = rows(False), rows(True)
-    assert fold == bucket
-    ids = {q for q, _, _, _ in fold} | {n for _, n, _, _ in fold}
-    assert 1000 not in ids and 1001 not in ids
-    nan_rows = [r for r in fold if 1002 in r[:2] or 1003 in r[:2]]
-    assert nan_rows and all(
-        np.isnan(struct.unpack("<d", bytes.fromhex(c))[0]) for *_, c in nan_rows
-    )
-
-
-# ---------------------------------------------------------------------------
 # Hash-family recall parity with the banding S-curve (VERDICT r10 #7): the
 # md5-31 MinHash family recovers planted twins at the rate the LSH theory
 # predicts, not just by mechanism.
 # ---------------------------------------------------------------------------
+import numpy as np
+
+from pyspark.sql import functions as F
+
 from flink_elasticsearch_ingestion_spark.operators import dedup as D
 
 

@@ -691,9 +691,10 @@ def test_lsh_bucket_expr_matches_column_build(spark):
     # readable Column-by-Column reference implementation
     import numpy as np
 
+    from lsh_reference import lsh_bucket
+
     from flink_elasticsearch_ingestion_spark.operators.similarity import (
         _hyperplanes,
-        lsh_bucket,
         lsh_bucket_expr,
     )
 
@@ -1197,61 +1198,6 @@ def test_linear_probe_rejects_single_class(spark, sf_dir):
 # ------------------------------------- embedding dedup capstone
 
 
-def test_embedding_lsh_arrow_matches_expression(spark, sf_dir):
-    """The BLAS bucket path must produce exactly the expression form's
-    verified pair set (signs agree except within ~1e-14 of zero, which
-    the fixture never hits)."""
-    from flink_elasticsearch_ingestion_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-    from flink_elasticsearch_ingestion_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in embedding_near_duplicates(
-            emb, threshold=0.4, bits=6, tables=8, arrow=True
-        ).collect()
-    }
-    b = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in embedding_near_duplicates(
-            emb, threshold=0.4, bits=6, tables=8, arrow=False
-        ).collect()
-    }
-    assert a == b and a
-
-
-def test_embedding_lsh_arrow_buckets_nan_like_expression(spark):
-    """A NaN element makes a NaN plane dot. Spark orders NaN above every
-    number, so the expression form puts that sign on the 1 side; the
-    BLAS bucket path must do the same, or the NaN vectors pair with
-    different partners on the two paths."""
-    import random
-
-    from flink_elasticsearch_ingestion_spark.operators.similarity import (
-        embedding_near_duplicates,
-    )
-
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    rows += [
-        (40, [float("nan")] + [0.5] * 7),
-        (41, [1.0, float("nan")] + [-0.5] * 6),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def pairs(arrow):
-        out = embedding_near_duplicates(
-            emb, threshold=-2.0, bits=2, tables=2, arrow=arrow
-        )
-        return sorted((r["vec_a"], r["vec_b"]) for r in out.collect())
-
-    got = pairs(True)
-    assert got == pairs(False)
-    assert any(40 in p for p in got) and any(41 in p for p in got)
-
-
 def test_embedding_dup_clusters_are_consistent(spark, sf_dir):
     import __spark_entry__ as E
 
@@ -1543,47 +1489,6 @@ def test_substring_contamination_caps_fact_sized_probe_sides(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     with pytest.raises(ValueError, match="benchmark-sized"):
         substring_contamination(docs, docs, max_needles=5)
-
-
-def test_bucket_shift_arrow_matches_expression_and_rebalances(spark, sf_dir):
-    """bucket_shift parity across the two bucket builders (BLAS matmul
-    vs unrolled SQL expression) on the all-positive media features —
-    the distribution the shift exists for — plus the rebalancing claim:
-    shifted bucketing must spread the same vectors over MORE buckets
-    than raw bucketing does."""
-    from flink_elasticsearch_ingestion_spark.operators import (
-        multimodal as M,
-        similarity as S,
-    )
-    from flink_elasticsearch_ingestion_spark.sources.tables import load_table
-
-    feats = M.sha_features_expr(
-        M.documents_as_media(load_table(spark, sf_dir, "documents"))
-    ).select(
-        F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding")
-    )
-    kw = dict(threshold=0.9, bits=5, tables=3, bucket_shift=0.5)
-    a = sorted(
-        map(tuple, S.embedding_near_duplicates(feats, arrow=True, **kw).collect())
-    )
-    b = sorted(
-        map(tuple, S.embedding_near_duplicates(feats, arrow=False, **kw).collect())
-    )
-    assert a == b
-    # rebalancing: distinct buckets (table 0) strictly increase
-    from flink_elasticsearch_ingestion_spark.operators.similarity import (
-        _hyperplanes,
-        lsh_bucket_expr,
-    )
-
-    planes = _hyperplanes(8, 5, 42)
-    raw = feats.select(lsh_bucket_expr("embedding", planes).alias("b"))
-    shifted = feats.withColumn(
-        "s", F.expr("transform(embedding, x -> CAST(x AS DOUBLE) - 0.5D)")
-    ).select(lsh_bucket_expr("s", planes).alias("b"))
-    n_raw = raw.distinct().count()
-    n_shifted = shifted.distinct().count()
-    assert n_shifted > n_raw, (n_raw, n_shifted)
 
 
 def test_bucket_cap_bounds_degenerate_bucket_pairs(spark):

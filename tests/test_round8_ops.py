@@ -250,30 +250,6 @@ def test_theil_sen_trend_is_robust_to_one_outlier(spark):
     assert abs(out["slope_per_day"] - slope0) < 1e-6
 
 
-def test_lsh_scored_pairs_arrow_matches_expression(spark, sf_dir):
-    """The BLAS-banded candidate stage returns the identical scored
-    pair set as the interpreted-HOF expression form — buckets, pairs,
-    and 6dp cosines all equal (the arrow path is the scale twin, the
-    expression path is the oracle twin)."""
-    from flink_elasticsearch_ingestion_spark.operators.similarity import (
-        _lsh_scored_pairs,
-    )
-    from flink_elasticsearch_ingestion_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    left = emb.filter(F.col("vec_id") % 2 == 0)
-    right = emb.filter(F.col("vec_id") % 2 == 1)
-    kw = dict(bits=4, tables=8, seed=42, query_id="vec_id",
-              corpus_id="vec_id", vec_col="embedding")
-    expr_rows = sorted(
-        map(tuple, _lsh_scored_pairs(left, right, **kw).collect())
-    )
-    arrow_rows = sorted(
-        map(tuple, _lsh_scored_pairs(left, right, arrow=True, **kw).collect())
-    )
-    assert expr_rows == arrow_rows and expr_rows
-
-
 def test_margin_best_match_normalizes_hub_density(spark):
     """A hub that scores high against EVERYTHING has a dense
     neighborhood, so its margin deflates below a pair whose cosine

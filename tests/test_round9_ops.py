@@ -1,9 +1,9 @@
 """Round-9 units: the LSH centering guard threaded through the SHARED
-candidate stage (``_lsh_scored_pairs`` / ``_arrow_banded``), the arrow
-bucket path's id-type and dirty-input parity with the expression form,
-the ``bits="auto"`` union-count fallback contract, and the
+candidate stage (``_lsh_scored_pairs`` / ``_arrow_banded``), the
+``bits="auto"`` union-count fallback contract, and the
 ``mutual_best_match`` argmax-aggregate rewrite's equivalence to the old
-rank-window form."""
+rank-window form. The id-type and dirty-input parity tests live with
+the family in ``test_lsh_vectors.py``."""
 
 import warnings as W
 
@@ -121,47 +121,6 @@ def test_shifted_buckets_rebalance_occupancy(spark):
 
 
 # ------------------------------------------------------- ADVICE low items
-
-
-def test_arrow_banded_preserves_string_ids(spark):
-    """ADVICE r8: arrow=True must carry arbitrary id types — string
-    doc ids come back as strings, bucket-identical to the expression
-    path."""
-    df = _positive_frame(spark, 32, id_type="string")
-    kw = dict(bits=3, tables=2, seed=42, query_id="vec_id",
-              corpus_id="vec_id", vec_col="embedding", center_check=False)
-    expr_pairs = sorted(
-        map(tuple, S._lsh_scored_pairs(df, df, **kw).collect())
-    )
-    arrow_pairs = sorted(
-        map(tuple, S._lsh_scored_pairs(df, df, arrow=True, **kw).collect())
-    )
-    assert expr_pairs == arrow_pairs
-    assert expr_pairs and isinstance(expr_pairs[0][0], str)
-
-
-def test_arrow_banded_drops_null_and_ragged_like_expression(spark):
-    """ADVICE r8: null / wrong-dimension vectors must fall out of the
-    arrow path the same way they fall out of the expression path
-    (null buckets drop from the equi-join) — not raise in vstack."""
-    good = _positive_frame(spark, 24)
-    dirty = good.unionByName(
-        spark.createDataFrame(
-            [(1000, None), (1001, [0.1, 0.2])],
-            "vec_id long, embedding array<double>",
-        )
-    )
-    kw = dict(bits=3, tables=2, seed=42, query_id="vec_id",
-              corpus_id="vec_id", vec_col="embedding", center_check=False)
-    expr_pairs = sorted(
-        map(tuple, S._lsh_scored_pairs(dirty, dirty, **kw).collect())
-    )
-    arrow_pairs = sorted(
-        map(tuple, S._lsh_scored_pairs(dirty, dirty, arrow=True, **kw).collect())
-    )
-    assert expr_pairs == arrow_pairs
-    ids = {p[0] for p in expr_pairs} | {p[1] for p in expr_pairs}
-    assert 1000 not in ids and 1001 not in ids
 
 
 def test_auto_bits_fallback_uses_union_count(spark, sf_dir):
